@@ -6,8 +6,9 @@
   1. cores: |Nε(L)| ≥ MinLns, where Nε includes L itself ([T] Defn 6) —
      one hash aggregation over the symmetrized pair list.
   2. clusters = connected components of the core-core subgraph, via
-     iterative min-label propagation (each round one join + one agg;
-     localCheckpoint every few rounds to truncate lineage).
+     iterative min-label propagation with graph contraction (each round
+     a few joins + aggs; the round's labels and contracted edge list are
+     localCheckpointed every round to truncate lineage).
   3. border segments attach to the minimum adjacent core label
      (deterministic; the paper's queue order is first-come-first-served,
      which is not reproducible in parallel — pinned to min).

@@ -11,8 +11,11 @@ subset over plain parquet directories with a JSON manifest per stage:
   lineage      = input snapshot ids (the DAG edge set)
   metrics      = row count + per-partition row counts (lineage + metrics)
 
-The interface is deliberately thin (write_stage / read_stage / is_current)
+The interface is deliberately thin (materialize / read_stage / is_current)
 so `df.writeTo(tbl).append()` on a real Iceberg catalog is a one-line swap.
+Deciding whether a stage is resumed is the caller's job (pipeline.run
+checks is_current before it builds the stage at all); this module only
+writes, commits and reads.
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 MANIFEST_NAME = "_imc_manifest.json"
 
@@ -61,26 +65,15 @@ def is_current(path: str, expected_snapshot: str) -> bool:
         return False
 
 
-def write_stage(df: DataFrame, path: str, stage: str,
-                input_snapshots: list[str], params_hash: str,
-                partition_by: list[str] | None = None,
-                stats_fn=None) -> str:
-    """Write df as a stage table + manifest; returns the snapshot id."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-    return refresh_manifest(df.sparkSession, path, stage, input_snapshots,
-                            params_hash, partition_by, stats_fn=stats_fn)
-
-
 def refresh_manifest(spark: SparkSession, path: str, stage: str,
                      input_snapshots: list[str], params_hash: str,
                      partition_by: list[str] | None = None,
-                     stats_fn=None) -> str:
+                     stats_fn=None) -> tuple[DataFrame, str]:
     """(Re)commit the manifest for data already at `path` — used both by
-    write_stage and by incremental dynamic-partition-overwrite commits
-    (the iceberg-lite analogue of an Iceberg snapshot commit).
+    materialize and by incremental dynamic-partition-overwrite commits
+    (the iceberg-lite analogue of an Iceberg snapshot commit). Returns
+    (the table as written, snapshot id): the read-back this commit
+    already did, so callers need not read the path again.
 
     stats_fn: optional `dict | Callable[[DataFrame, str], dict]` of extra
     JSON-serializable column statistics recorded under manifest["stats"] —
@@ -114,7 +107,7 @@ def refresh_manifest(spark: SparkSession, path: str, stage: str,
         "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
     _write_json_atomic(_manifest_path(path), manifest)
-    return snap
+    return written, snap
 
 
 def _write_json_atomic(mp: str, payload: dict) -> None:
@@ -127,8 +120,16 @@ def _write_json_atomic(mp: str, payload: dict) -> None:
     os.replace(tmp, mp)
 
 
-def read_stage(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+def read_stage(spark: SparkSession, path: str,
+               schema: dict | None = None) -> DataFrame:
+    """The stage table at `path`. `schema` is the manifest's recorded
+    schema (manifest["schema"]); given it, the read skips parquet's
+    schema-inference job, so reading a committed stage starts no Spark
+    job."""
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(StructType.fromJson(schema))
+    return reader.parquet(path)
 
 
 def write_bucketed_table(df: DataFrame, table: str, bucket_cols: list[str],
@@ -213,15 +214,16 @@ def read_venue_stats(spark: SparkSession, stage_path: str) -> DataFrame | None:
 
 def materialize(df: DataFrame, path: str, stage: str,
                 input_snapshots: list[str], params_hash: str,
-                resume: bool = True,
                 partition_by: list[str] | None = None,
                 stats_fn=None) -> tuple[DataFrame, str]:
-    """Stage checkpoint: skip compute when the manifest already matches the
-    expected content-addressed snapshot (resume semantics of the north_rule).
+    """Stage checkpoint: write df as the stage table and commit its
+    manifest. Always writes — whether a stage can be resumed instead is
+    decided by the caller before it builds df (pipeline.run, with
+    snapshot_id + is_current), so a skipped stage's operator never runs.
     Returns (stage DataFrame as read back, snapshot id)."""
-    snap = snapshot_id(stage, input_snapshots, params_hash)
-    if resume and is_current(path, snap):
-        return read_stage(df.sparkSession, path), snap
-    write_stage(df, path, stage, input_snapshots, params_hash, partition_by,
-                stats_fn=stats_fn)
-    return read_stage(df.sparkSession, path), snap
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+    return refresh_manifest(df.sparkSession, path, stage, input_snapshots,
+                            params_hash, partition_by, stats_fn=stats_fn)

@@ -9,7 +9,12 @@ pages ─filter/dedupe/extract/parse─► points
       ─broadcast PIP─► tile_assignments
 
 Every stage lands as an iceberg_lite snapshot table (imc.manifest): a rerun
-with the same inputs + params skips completed stages (resume).
+with the same inputs + params skips completed stages (resume). run() makes
+the resume decision, once per stage and before anything is built: each
+stage is given as a zero-argument builder, called only when the stage's
+manifest must be written. A skipped stage therefore runs no operator and
+no eager probe or collect, and is read back with the schema its manifest
+records, so a fully resumed run starts no Spark job.
 """
 
 from __future__ import annotations
@@ -134,11 +139,21 @@ def run(spark: SparkSession, pages: DataFrame, out_dir: str,
     os.makedirs(out_dir, exist_ok=True)
     results: dict[str, tuple[str, str]] = {}
 
-    def stage(name, df, inputs, partition_by=None, stats_fn=None):
+    def stage(name, build, inputs, partition_by=None, stats_fn=None):
+        """Resume decision for one stage: a committed manifest with the
+        expected snapshot is read back and `build` is never called, so a
+        skipped stage runs neither its operator nor its eager probes.
+        `build()` is evaluated before materialize is entered, so the
+        operator's own work never counts as write time."""
         path = os.path.join(out_dir, name)
-        out, snap = manifest.materialize(df, path, name, inputs, ph,
-                                         resume=resume, partition_by=partition_by,
-                                         stats_fn=stats_fn)
+        snap = manifest.snapshot_id(name, inputs, ph)
+        if resume and manifest.is_current(path, snap):
+            out = manifest.read_stage(
+                spark, path, manifest.read_manifest(path)["schema"])
+        else:
+            out, _ = manifest.materialize(build(), path, name, inputs, ph,
+                                          partition_by=partition_by,
+                                          stats_fn=stats_fn)
         results[name] = (path, snap)
         return out, snap
 
@@ -146,29 +161,36 @@ def run(spark: SparkSession, pages: DataFrame, out_dir: str,
     # points + segments are hive-partitioned by venue: a bbox/venue query
     # then PRUNES at the scan (SURVEY.md §4.2 partition-pruning row) —
     # at 10^12 docs an unpartitioned layout re-scans the world per venue
-    pts, s_pts = stage("points",
-                       extract.pages_to_points(pages).withColumn("venue", venue_col),
-                       [_input_fingerprint(pages)], partition_by=["venue"])
+    pts, s_pts = stage(
+        "points",
+        lambda: extract.pages_to_points(pages).withColumn("venue", venue_col),
+        [_input_fingerprint(pages)], partition_by=["venue"])
     seg_fn = segments.mdl_segments if use_mdl else segments.raw_segments
-    segs, s_seg = stage("segments", seg_fn(pts).withColumn("venue", venue_col),
+    segs, s_seg = stage("segments",
+                        lambda: seg_fn(pts).withColumn("venue", venue_col),
                         [s_pts], partition_by=["venue"],
                         stats_fn=_segments_stats_fn(params))
-    seg_stats = manifest.read_manifest(results["segments"][0]).get("stats")
-    pairs, s_pairs = stage(
-        "eps_pairs",
-        joins.eps_join(segs, params, has_long=_has_long(seg_stats, params),
-                       hot_cells=(seg_stats or {}).get("hot_cells")),
-        [s_seg])
-    assign, s_assign = stage("assignments", dbscan.dbscan(segs, pairs, params),
+
+    def eps_pairs():
+        seg_stats = manifest.read_manifest(results["segments"][0]).get("stats")
+        return joins.eps_join(segs, params,
+                              has_long=_has_long(seg_stats, params),
+                              hot_cells=(seg_stats or {}).get("hot_cells"))
+
+    pairs, s_pairs = stage("eps_pairs", eps_pairs, [s_seg])
+    assign, s_assign = stage("assignments",
+                             lambda: dbscan.dbscan(segs, pairs, params),
                              [s_seg, s_pairs])
-    rep, s_rep = stage("rep_points",
-                       sweep.representative_trajectories(segs, assign, params),
-                       [s_seg, s_assign])
-    stage("corridors", corridors.corridor_polygons(segs, assign, params),
+    stage("rep_points",
+          lambda: sweep.representative_trajectories(segs, assign, params),
           [s_seg, s_assign])
-    rast, s_rast = stage("raster", raster.rasterize(segs, params), [s_seg],
-                         partition_by=["venue"])
-    polys, s_polys = stage("polygons", raster.extract_polygons(rast, params),
+    stage("corridors",
+          lambda: corridors.corridor_polygons(segs, assign, params),
+          [s_seg, s_assign])
+    rast, s_rast = stage("raster", lambda: raster.rasterize(segs, params),
+                         [s_seg], partition_by=["venue"])
+    polys, s_polys = stage("polygons",
+                           lambda: raster.extract_polygons(rast, params),
                            [s_rast], partition_by=["venue"])
 
     # tiles := extracted outer polygons; tile_id = venue * 1000 + poly_id
@@ -181,14 +203,17 @@ def run(spark: SparkSession, pages: DataFrame, out_dir: str,
     # manifest row_count upper-bounds it for free (rows = outer + holes),
     # so the common small case decides with zero extra jobs; only a
     # row_count above the limit pays the filtered count.
-    n_rows = manifest.read_manifest(results["polygons"][0]).get("row_count", 0)
-    n_tiles = (n_rows if n_rows <= TILE_BROADCAST_LIMIT
-               else _tiles_df_from_polygons(polys).count())
-    if n_tiles <= TILE_BROADCAST_LIMIT:
-        ta = joins.tile_assignments(segs, _tiles_from_polygons(polys))
-    else:
-        ta = joins.tile_assignments_cogrouped(segs, _tiles_df_from_polygons(polys))
-    stage("tile_assignments", ta, [s_seg, s_polys])
+    def tile_assignments():
+        n_rows = manifest.read_manifest(
+            results["polygons"][0]).get("row_count", 0)
+        n_tiles = (n_rows if n_rows <= TILE_BROADCAST_LIMIT
+                   else _tiles_df_from_polygons(polys).count())
+        if n_tiles <= TILE_BROADCAST_LIMIT:
+            return joins.tile_assignments(segs, _tiles_from_polygons(polys))
+        return joins.tile_assignments_cogrouped(
+            segs, _tiles_df_from_polygons(polys))
+
+    stage("tile_assignments", tile_assignments, [s_seg, s_polys])
     return results
 
 
@@ -402,18 +427,19 @@ def run_incremental(spark: SparkSession, new_pages: DataFrame, out_dir: str,
             _delete_dir(spark, os.path.join(path, f"venue={v}"))
         with _dynamic_overwrite(spark):
             df.write.mode("overwrite").partitionBy("venue").parquet(path)
-        snap = manifest.refresh_manifest(spark, path, name, inputs_of(name),
-                                         ph, partition_by=["venue"],
-                                         stats_fn=stats_fn)
+        out, snap = manifest.refresh_manifest(spark, path, name,
+                                              inputs_of(name), ph,
+                                              partition_by=["venue"],
+                                              stats_fn=stats_fn)
         results[name] = (path, snap)
-        return manifest.read_stage(spark, path)
+        return out
 
     def rewrite(name: str, df: DataFrame) -> DataFrame:
         path = os.path.join(out_dir, name)
         df = df.localCheckpoint(eager=True)
-        snap = manifest.write_stage(df, path, name, inputs_of(name), ph)
+        out, snap = manifest.materialize(df, path, name, inputs_of(name), ph)
         results[name] = (path, snap)
-        return manifest.read_stage(spark, path)
+        return out
 
     def align(df: DataFrame, like: DataFrame) -> DataFrame:
         return df.select(*[F.col(f.name).cast(f.dataType).alias(f.name)

@@ -56,7 +56,9 @@ def _harvest_metrics(q, extra: dict | None = None) -> dict:
     sink reports numOutputRows as -1/absent, so the parquet-sink ops
     carry their own observation; foreachBatch sinks pass driver-side
     Observation counts via `extra`), and late rows dropped by the
-    watermark (state-store numRowsDroppedByWatermark)."""
+    watermark (state-store numRowsDroppedByWatermark). `truncated: True`
+    means the counts are POSSIBLY truncated (see below), not that they
+    certainly are."""
     rows_in = rows_out = dropped = batches = 0
     for p in _progress_dicts(q):
         batches += 1
@@ -81,7 +83,9 @@ def _harvest_metrics(q, extra: dict | None = None) -> dict:
     # recentProgress is a ring buffer capped at
     # spark.sql.streaming.numRecentProgressUpdates (default 100): a run
     # with more micro-batches than that silently undercounts while
-    # looking authoritative (ADVICE r06) — flag it instead
+    # looking authoritative (ADVICE r06) — flag it instead. The flag is
+    # conservative: at exactly `cap` micro-batches nothing was dropped,
+    # but a full buffer cannot be told apart from an overflowed one
     try:
         from pyspark.sql import SparkSession
         sess = SparkSession.getActiveSession()

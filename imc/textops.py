@@ -458,7 +458,10 @@ def min_label_components(ids: DataFrame, pairs: DataFrame, id_col: str,
               .join(ids.select(F.col(id_col).alias("_id")), "_id",
                     "left_semi"))  # membership contract unchanged: only
     # ids rows ever appear in the output
-    lbl = pnodes.withColumn("label", F.col("_id")).persist()
+    # `held` is the persisted frame itself: unpersist() on a projection
+    # of it (like `lbl` after round 1) matches no cached plan and frees
+    # nothing
+    held = lbl = pnodes.withColumn("label", F.col("_id")).persist()
     converged = False
     for _ in range(max_rounds):
         nb = (edges.join(lbl.select(F.col("_id").alias("b_id"),
@@ -472,8 +475,8 @@ def min_label_components(ids: DataFrame, pairs: DataFrame, id_col: str,
                        .alias("label"))
                .persist())
         changed = new.filter("label != _old").count()
-        lbl.unpersist()
-        lbl = new.select("_id", "label")
+        held.unpersist()
+        held, lbl = new, new.select("_id", "label")
         if changed == 0:
             converged = True
             break

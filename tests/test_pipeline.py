@@ -12,13 +12,38 @@ from imc.config import IMCParams
 PARAMS = IMCParams(eps=1.2, min_lns=3)
 
 
+# the operator that builds each stage, as pipeline.run calls it
+OPERATORS = ["extract.pages_to_points", "segments.mdl_segments",
+             "joins.eps_join", "dbscan.dbscan",
+             "sweep.representative_trajectories",
+             "corridors.corridor_polygons", "raster.rasterize",
+             "raster.extract_polygons", "joins.tile_assignments"]
+
+
+def _spy_operators(monkeypatch) -> list[str]:
+    """Record every stage-operator call pipeline.run makes."""
+    calls: list[str] = []
+    for key in OPERATORS:
+        mod, fn = key.split(".")
+        real = getattr(getattr(pipeline, mod), fn)
+
+        def spy(*a, _real=real, _key=key, **k):
+            calls.append(_key)
+            return _real(*a, **k)
+
+        monkeypatch.setattr(getattr(pipeline, mod), fn, spy)
+    return calls
+
+
 @pytest.mark.usefixtures("spark")
-def test_pipeline_end_to_end_and_resume(spark, tmp_path):
+def test_pipeline_end_to_end_and_resume(spark, tmp_path, monkeypatch):
     path = gen_pages.ensure_pages(sf=0.001)
     pages = spark.read.parquet(path)
     out = str(tmp_path / "run1")
+    calls = _spy_operators(monkeypatch)
 
     results = pipeline.run(spark, pages, out, PARAMS)
+    assert sorted(set(calls)) == sorted(OPERATORS)
     expected = {"points", "segments", "eps_pairs", "assignments",
                 "rep_points", "corridors", "raster", "polygons",
                 "tile_assignments"}
@@ -31,26 +56,43 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
         assert sum(pc["rows"] for pc in m["partitions"]) == m["row_count"]
 
     # resume: second run with identical inputs+params must skip (manifests
-    # unchanged on disk — compare mtimes)
+    # unchanged on disk — compare mtimes) without building any stage or
+    # starting any Spark job (stages are read back with their recorded
+    # schema, so not even a schema-inference job runs)
     mtimes = {n: os.path.getmtime(os.path.join(p, manifest.MANIFEST_NAME))
               for n, (p, _) in results.items()}
-    results2 = pipeline.run(spark, pages, out, PARAMS)
+    calls.clear()
+    sc = spark.sparkContext
+    sc.setJobGroup("imc-resume", "fully resumed rerun")
+    try:
+        results2 = pipeline.run(spark, pages, out, PARAMS)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert calls == []
+    assert list(sc.statusTracker().getJobIdsForGroup("imc-resume")) == []
     for n, (p, snap) in results2.items():
         assert results[n][1] == snap
         assert os.path.getmtime(os.path.join(p, manifest.MANIFEST_NAME)) == mtimes[n], n
 
-    # param change → new snapshot ids → stages recompute
-    p2 = IMCParams(eps=1.2, min_lns=4)
-    results3 = pipeline.run(spark, pages, out, p2)
-    assert results3["eps_pairs"][1] != results["eps_pairs"][1]
-
-    # corrupted manifest → stage recomputes
+    # corrupted manifest → that stage recomputes; it rewrites the same
+    # snapshot, so every later stage still resumes without being built
     mp = os.path.join(results["points"][0], manifest.MANIFEST_NAME)
     with open(mp, "w") as f:
         json.dump({"snapshot_id": "bogus"}, f)
-    results4 = pipeline.run(spark, pages, out, PARAMS)
-    assert results4["points"][1] == results["points"][1]
+    calls.clear()
+    results3 = pipeline.run(spark, pages, out, PARAMS)
+    assert calls == ["extract.pages_to_points"]
+    assert results3 == results
     assert manifest.read_manifest(results["points"][0])["snapshot_id"] == results["points"][1]
+
+    # param change → new snapshot ids → stages recompute. Every stage's
+    # snapshot hashes the whole IMCParams, so every operator runs again.
+    p2 = IMCParams(eps=1.2, min_lns=4)
+    calls.clear()
+    results4 = pipeline.run(spark, pages, out, p2)
+    assert sorted(set(calls)) == sorted(OPERATORS)
+    assert results4["eps_pairs"][1] != results["eps_pairs"][1]
 
     # DIFFERENT input, same output dir → root fingerprint differs → every
     # stage recomputes instead of returning stale outputs (ADVICE r01)

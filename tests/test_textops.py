@@ -232,6 +232,23 @@ def test_dedup_clusters_components_and_keepers(spark, docs):
     assert (keepers["doc_id"] == keepers["cluster_id"]).all()
 
 
+def test_dedup_clusters_frees_superseded_label_tables(spark, docs):
+    """Label propagation persists one label table per round; only the
+    last one may stay cached behind the result. The planted pair
+    (200, 201) takes two rounds (one relabel, one convergence check).
+    Dataset caches name their RDD after the cached plan; the unnamed
+    persisted RDDs are localCheckpoints the result still reads."""
+    def cached_rdds():
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        return {int(k) for k in rdds.keySet().toArray()
+                if rdds.get(k).name() is not None}
+
+    before = cached_rdds()
+    out = textops.dedup_clusters(docs, threshold=0.7)
+    assert len(cached_rdds() - before) <= 1
+    assert out.filter("doc_id = 201").first()["cluster_id"] == 200
+
+
 def test_dedup_clusters_chain_transitivity(spark):
     """A near-dup CHAIN (A~B, B~C, A!~C) must still collapse to ONE
     component — pairs alone can't dedupe transitively, components can."""
