@@ -96,17 +96,6 @@ def _venue_stats_agg(df: DataFrame) -> DataFrame:
                               * (F.col("y2") - F.col("y1")))).alias("max_len")))
 
 
-def _stats_summary(stats_df: DataFrame) -> dict:
-    """O(1) manifest-JSON summary of a venue-stats side table: venue count
-    + the global max segment length (drives has_long with the exact
-    predicate the in-join probe evaluates — strict >, same float64)."""
-    row = stats_df.agg(F.count("*").alias("n"),
-                       F.max("max_len").alias("mx")).collect()[0]
-    return {"venue_stats": manifest.VENUE_STATS_DIR,
-            "n_venues": int(row["n"]),
-            "max_len": float(row["mx"]) if row["mx"] is not None else 0.0}
-
-
 def _segments_stats_fn(params: IMCParams):
     """stats_fn for the segments stage: persist the per-venue stats side
     table, then record only O(1) scalars in the manifest JSON — n_venues,
@@ -115,8 +104,7 @@ def _segments_stats_fn(params: IMCParams):
     joins.HOT_CELLS_CAP, results-invariant by the salted≡unsalted
     guarantee)."""
     def fn(written: DataFrame, path: str) -> dict:
-        sdf = manifest.write_venue_stats(_venue_stats_agg(written), path)
-        return _stats_summary(sdf) | {
+        return manifest.write_venue_stats(_venue_stats_agg(written), path) | {
             "hot_cells": joins.hot_cell_keys(written, params)}
     return fn
 
@@ -324,7 +312,8 @@ def run_incremental(spark: SparkSession, new_pages: DataFrame, out_dir: str,
     # urls from the BATCH, not from the extracted points: a url whose new
     # version yields zero points must still replace (delete) its old points
     new_urls = new_pages.select("url").distinct().localCheckpoint(eager=True)
-    old_points = manifest.read_stage(spark, os.path.join(out_dir, "points"))
+    old_points = manifest.read_stage(spark, os.path.join(out_dir, "points"),
+                                     prev["points"]["schema"])
     # affected venues = venues receiving NEW points ∪ venues LOSING points
     # because one of their urls was re-crawled (ADVICE r02: a url's newer
     # version may stop carrying points for a venue its old version had —
@@ -413,9 +402,10 @@ def run_incremental(spark: SparkSession, new_pages: DataFrame, out_dir: str,
     def overwrite_partitions(name: str, df: DataFrame,
                              stats_fn=None) -> DataFrame:
         """Dynamic-partition-overwrite the affected venue dirs, refresh the
-        manifest (recount), return the full merged table. localCheckpoint
-        breaks the read-path↔write-path cycle (a real Iceberg commit makes
-        this a metadata swap). Affected venue dirs are DROPPED first:
+        manifest (footer counts over every venue dir now on disk), return
+        the full merged table. localCheckpoint breaks the
+        read-path↔write-path cycle (a real Iceberg commit makes this a
+        metadata swap). Affected venue dirs are DROPPED first:
         dynamic overwrite only replaces partitions PRESENT in df, so a
         venue whose recompute yields zero rows (e.g. its new pages carry
         only sub-2-point trajectories) would otherwise keep its stale
@@ -428,7 +418,7 @@ def run_incremental(spark: SparkSession, new_pages: DataFrame, out_dir: str,
         with _dynamic_overwrite(spark):
             df.write.mode("overwrite").partitionBy("venue").parquet(path)
         out, snap = manifest.refresh_manifest(spark, path, name,
-                                              inputs_of(name), ph,
+                                              inputs_of(name), ph, df.schema,
                                               partition_by=["venue"],
                                               stats_fn=stats_fn)
         results[name] = (path, snap)
@@ -451,6 +441,7 @@ def run_incremental(spark: SparkSession, new_pages: DataFrame, out_dir: str,
     # a guard after the points/segments overwrite left a committed but
     # cross-stage-inconsistent output behind)
     merged_points = (in_aff(old_points).join(new_urls, "url", "left_anti")
+                     .select(old_points.columns)  # the join moved url first
                      .unionByName(align(new_pts, old_points)))
     new_segs = (segments.mdl_segments(merged_points)
                 .withColumn("venue", venue_col)
@@ -487,7 +478,7 @@ def run_incremental(spark: SparkSession, new_pages: DataFrame, out_dir: str,
         merged = (old_sdf.join(F.broadcast(aff_df), "venue", "left_anti")
                   .unionByName(new_stats_df)
                   if old_sdf is not None else _venue_stats_agg(written))
-        out = _stats_summary(manifest.write_venue_stats(merged, path))
+        out = manifest.write_venue_stats(merged, path)
         if "hot_cells" in old_seg_stats:
             out["hot_cells"] = old_seg_stats["hot_cells"]
         return out
@@ -496,7 +487,8 @@ def run_incremental(spark: SparkSession, new_pages: DataFrame, out_dir: str,
                                 stats_fn=merged_stats_fn)
     segs_aff = in_aff(segs).localCheckpoint(eager=True)
 
-    old_pairs = manifest.read_stage(spark, os.path.join(out_dir, "eps_pairs"))
+    old_pairs = manifest.read_stage(spark, os.path.join(out_dir, "eps_pairs"),
+                                    prev["eps_pairs"]["schema"])
     # has_long from the delta's own stats (eps_join runs on affected venues
     # only) — no probe job, plan identical to what the probe would pick;
     # hot cells carried over from the base manifest (review r5: the delta
@@ -515,7 +507,8 @@ def run_incremental(spark: SparkSession, new_pages: DataFrame, out_dir: str,
     # component min (collision-free), merge, re-rank. DBSCAN consumes the
     # MATERIALIZED pair table (filtered back to affected venues), not the
     # new_pairs plan — the ε-join would otherwise run twice
-    old_assign = manifest.read_stage(spark, os.path.join(out_dir, "assignments"))
+    old_assign = manifest.read_stage(spark, os.path.join(out_dir, "assignments"),
+                                     prev["assignments"]["schema"])
     new_assign = dbscan.dbscan(
         segs_aff, in_aff(pairs_tbl, key="a_seg"), params)
     merged_keyed = (
@@ -531,7 +524,8 @@ def run_incremental(spark: SparkSession, new_pages: DataFrame, out_dir: str,
     polys = overwrite_partitions(
         "polygons", raster.extract_polygons(in_aff(rast), params))
 
-    old_ta = manifest.read_stage(spark, os.path.join(out_dir, "tile_assignments"))
+    old_ta = manifest.read_stage(spark, os.path.join(out_dir, "tile_assignments"),
+                                 prev["tile_assignments"]["schema"])
     # delta-sized tile set (affected venues only) → the broadcast PIP is
     # the right plan here regardless of total corpus size
     new_ta = joins.tile_assignments(
@@ -641,7 +635,9 @@ def _extent_guard_scan(spark: SparkSession, out_dir: str, aff_df: DataFrame,
     predates per-venue stats: one broadcast-NLJ pass over the old segments
     table (corpus-scale — paid once; the next commit records stats and
     every later batch takes the driver-side guard)."""
-    old_segs_tbl = manifest.read_stage(spark, os.path.join(out_dir, "segments"))
+    seg_path = os.path.join(out_dir, "segments")
+    old_segs_tbl = manifest.read_stage(
+        spark, seg_path, manifest.read_manifest(seg_path)["schema"])
 
     def _ext(df: DataFrame) -> DataFrame:
         return (df.groupBy("venue")

@@ -19,6 +19,15 @@ def test_entry_smoke(spark):
     assert set(df.columns) == {"a_seg", "b_seg", "dist", "a_tile", "b_tile"}
 
 
+def test_queries_outside_driver_snapshot_are_pinned():
+    """The queries past the driver's snapshot window get no driver
+    correctness row; a reorder that changes which ones must show here."""
+    names = list(entrymod.queries())
+    assert len(names) == 56
+    assert (tuple(names[entrymod.DRIVER_SNAPSHOT_ROWS:])
+            == entrymod.OUTSIDE_DRIVER_SNAPSHOT)
+
+
 ROWS_ONLY = sorted(set(entrymod.queries()) - set(entrymod.oracle_sql()))
 
 

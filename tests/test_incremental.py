@@ -4,6 +4,7 @@ recompute over (old ∪ new) pages, while touching only affected-venue
 partitions on disk."""
 
 import os
+from urllib.parse import urlparse
 
 import pandas as pd
 import pytest
@@ -106,6 +107,20 @@ def test_incremental_empty_venue_drops_stale_partition(spark, tmp_path):
     assert segs.filter("venue = 0").count() == 0
     assert segs.count() > 0  # venues 1-9 intact
 
+    # every manifest the fold committed counts the table as it now is on
+    # disk: untouched venue files are listed, dropped venue dirs are not
+    for name, (p, _) in inc_results.items():
+        m = manifest.read_manifest(p)
+        table = spark.read.parquet(p)
+        assert m["row_count"] == table.count(), name
+        on_disk = {os.path.relpath(urlparse(f).path, p)
+                   for f in table.inputFiles()}
+        assert {e["file"] for e in m["partitions"]} == on_disk, name
+    seg_files = [e["file"] for e in
+                 manifest.read_manifest(inc_results["segments"][0])["partitions"]]
+    assert any(f.startswith("venue=5/") for f in seg_files)
+    assert not any(f.startswith("venue=0/") for f in seg_files)
+
     full_out = str(tmp_path / "full2")
     full_results = pipeline.run(spark, pages.unionByName(new_batch),
                                 full_out, PARAMS)
@@ -115,6 +130,10 @@ def test_incremental_empty_venue_drops_stale_partition(spark, tmp_path):
         got = _read_sorted(spark, inc_results[name][0], keys)
         want = _read_sorted(spark, full_results[name][0], keys)
         pd.testing.assert_frame_equal(got, want, check_dtype=False, obj=name)
+    # a fold records the schema a cold run records (venue stays bigint)
+    for name, (p, _) in inc_results.items():
+        assert (manifest.read_manifest(p)["schema"]
+                == manifest.read_manifest(full_results[name][0])["schema"]), name
 
 
 @pytest.mark.usefixtures("spark")
@@ -475,11 +494,13 @@ def test_venue_stats_side_table_bounded_at_1e5_venues(spark, tmp_path,
         F.lit(1.0).alias("max_len"))
     stage = str(tmp_path / "seg_stage")
     os.makedirs(stage)
-    manifest.write_venue_stats(stats, stage)
+    summary = manifest.write_venue_stats(stats, stage)
+    assert summary["n_venues"] == n
+    assert summary["max_len"] == 1.0
 
     sdf = manifest.read_venue_stats(spark, stage)
-    summary = pipeline._stats_summary(sdf)
-    assert summary["n_venues"] == n
+    # the table on disk holds every venue row the summary counted
+    assert tuple(sdf.agg(F.count("*"), F.max("max_len")).first()) == (n, 1.0)
     assert len(json.dumps(summary)) < 512  # manifest JSON stays O(1)
 
     # lazy closure: a seed hull spanning venue 0's cell and reaching

@@ -1,9 +1,12 @@
 """End-to-end pipeline + resume semantics (SURVEY.md §7.1 M7)."""
 
+import itertools
 import json
 import os
+from contextlib import contextmanager
 
 import pytest
+from pyspark.sql.types import LongType, StructField, StructType
 
 from fixtures import gen_pages
 from imc import manifest, pipeline
@@ -35,12 +38,43 @@ def _spy_operators(monkeypatch) -> list[str]:
     return calls
 
 
+@contextmanager
+def _job_group(sc, group: str):
+    """Run the block's Spark jobs under `group`; yields the group's job
+    ids, filled in when the block exits."""
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _spy_commits(spark, monkeypatch) -> dict[str, tuple[int, StructType]]:
+    """Run every manifest commit under its own job group; record per
+    stage (jobs the commit started, schema of the frame it returned)."""
+    commits: dict[str, tuple[int, StructType]] = {}
+    real, seq = manifest.refresh_manifest, itertools.count()
+
+    def spy(sp, path, stage, *a, **k):
+        with _job_group(spark.sparkContext, f"commit-{next(seq)}") as ids:
+            out = real(sp, path, stage, *a, **k)
+        commits[stage] = (len(ids), out[0].schema)
+        return out
+
+    monkeypatch.setattr(manifest, "refresh_manifest", spy)
+    return commits
+
+
 @pytest.mark.usefixtures("spark")
 def test_pipeline_end_to_end_and_resume(spark, tmp_path, monkeypatch):
     path = gen_pages.ensure_pages(sf=0.001)
     pages = spark.read.parquet(path)
     out = str(tmp_path / "run1")
     calls = _spy_operators(monkeypatch)
+    commits = _spy_commits(spark, monkeypatch)
 
     results = pipeline.run(spark, pages, out, PARAMS)
     assert sorted(set(calls)) == sorted(OPERATORS)
@@ -54,6 +88,19 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path, monkeypatch):
         assert m["committed"]
         assert m["row_count"] > 0, name
         assert sum(pc["rows"] for pc in m["partitions"]) == m["row_count"]
+        # the commit starts no Spark job beyond the stage's own write
+        # (segments alone writes its venue-stats side table), yet its
+        # footer counts and recorded schema match what Spark reads back
+        # — except venue, which keeps the operator's bigint where
+        # directory inference says int
+        if name != "segments":
+            assert commits[name][0] == 0, (name, commits[name][0])
+        written = spark.read.parquet(p)
+        assert m["row_count"] == written.count(), name
+        inferred = StructType([
+            f if f.name != "venue" else StructField("venue", LongType())
+            for f in written.schema.fields])
+        assert StructType.fromJson(m["schema"]) == inferred, name
 
     # resume: second run with identical inputs+params must skip (manifests
     # unchanged on disk — compare mtimes) without building any stage or
@@ -62,15 +109,22 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path, monkeypatch):
     mtimes = {n: os.path.getmtime(os.path.join(p, manifest.MANIFEST_NAME))
               for n, (p, _) in results.items()}
     calls.clear()
-    sc = spark.sparkContext
-    sc.setJobGroup("imc-resume", "fully resumed rerun")
-    try:
+    resumed: dict[str, StructType] = {}
+    real_read = manifest.read_stage
+
+    def read_spy(sp, p, schema=None):
+        df = real_read(sp, p, schema)
+        resumed[os.path.basename(p)] = df.schema
+        return df
+
+    monkeypatch.setattr(manifest, "read_stage", read_spy)
+    with _job_group(spark.sparkContext, "imc-resume") as resume_jobs:
         results2 = pipeline.run(spark, pages, out, PARAMS)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    monkeypatch.setattr(manifest, "read_stage", real_read)
     assert calls == []
-    assert list(sc.statusTracker().getJobIdsForGroup("imc-resume")) == []
+    assert resume_jobs == []
+    # cold and resumed runs hand downstream stages one schema
+    assert resumed == {n: commits[n][1] for n in expected}
     for n, (p, snap) in results2.items():
         assert results[n][1] == snap
         assert os.path.getmtime(os.path.join(p, manifest.MANIFEST_NAME)) == mtimes[n], n
