@@ -64,7 +64,7 @@ class _UF:
 def dbscan_oracle(seg_ids: np.ndarray, traj_ids: np.ndarray, segs: np.ndarray,
                   eps: float, min_lns: int) -> pd.DataFrame:
     """assignments(seg_id, cluster_id, is_core) via union-find over the full
-    matrix — structurally different from the engine's label propagation."""
+    matrix — structurally different from the engine's contraction rounds."""
     order = np.argsort(seg_ids)
     seg_ids = seg_ids[order]
     traj_ids = traj_ids[order]

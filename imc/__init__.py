@@ -13,7 +13,8 @@ Layout (SURVEY.md §7.8):
   extract.py   pages → points (extract_text, parse_points pandas UDFs)
   segments.py  points → segments (window lead) + MDL partitioning
   joins.py     ε self-join / kNN join (cell prefilter + exact refine), PIP
-  dbscan.py    segment DBSCAN via agg + contracting label propagation
+  dbscan.py    segment DBSCAN via agg + connected components (graph.py)
+  graph.py     the connected-components engine (DBSCAN, near-dup clusters)
   sweep.py     representative-trajectory sweep per cluster
   corridors.py corridor polygons: miter-offset buffer of rep polylines
   quality.py   TRACLUS QMeasure clustering-quality metric ([T] §6.2)

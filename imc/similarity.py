@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from imc import textops
+from imc import graph
 
 def _cos_expr(x, y):
     """Exact cosine as JVM array expressions, fixed dimension order, with
@@ -972,11 +972,14 @@ def embedding_dup_clusters(embeddings: DataFrame, threshold: float = 0.9,
     """(vec_id, cluster_id, is_keeper) — the vector twin of
     textops.dedup_clusters: connected components over the embedding-
     cosine near-duplicate pair graph (embedding_dup_pairs: multi-table
-    sign-LSH candidates, exact-cosine refine), labels via the shared
-    min-label propagation. Completes the dedup ladder at its operational
-    end for the embedding modality too — purge list = NOT is_keeper,
-    canonical representative = the component-min vec_id."""
-    pairs = embedding_dup_pairs(embeddings, threshold, bits, tables).select(
-        F.col("a_id"), F.col("b_id"))
-    return textops.min_label_components(
-        embeddings.select("vec_id").distinct(), pairs, "vec_id")
+    sign-LSH candidates, exact-cosine refine), labelled by
+    imc.graph.connected_components. Completes the dedup ladder at its
+    operational end for the embedding modality too — purge list = NOT
+    is_keeper, canonical representative = the component-min vec_id."""
+    pairs = embedding_dup_pairs(embeddings, threshold, bits, tables)
+    comp = graph.connected_components(
+        embeddings.select(F.col("vec_id").alias("id")).distinct(),
+        pairs.select(F.col("a_id").alias("a"), F.col("b_id").alias("b")))
+    return comp.select(F.col("id").alias("vec_id"),
+                       F.col("comp").alias("cluster_id"),
+                       (F.col("id") == F.col("comp")).alias("is_keeper"))

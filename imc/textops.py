@@ -27,6 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from imc import graph
+
 MINHASH_K = 8
 LSH_BANDS = 4  # 2 signature rows per band
 
@@ -401,98 +403,25 @@ def simhash_near_pairs(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
             .filter(F.col("hamming") <= max_hamming))
 
 
-def dedup_clusters(documents: DataFrame, threshold: float = 0.7,
-                   max_rounds: int = 16) -> DataFrame:
+def dedup_clusters(documents: DataFrame, threshold: float = 0.7) -> DataFrame:
     """(doc_id, cluster_id, is_keeper) — near-duplicate CLUSTERS: connected
     components over the verified Jaccard pair graph, the operational end
     of the dedup ladder (pairs alone don't dedupe a corpus; the purge
     list is `NOT is_keeper`). cluster_id = component-min doc_id (the
     canonical keeper); singleton docs are their own cluster.
 
-    Min-label propagation over the symmetric edge list — one equi-join +
-    hash-agg per round, converging in O(component diameter) rounds;
-    near-dup components are near-cliques (every member pairs with most
-    others), so 2-3 rounds in practice at any corpus size. Convergence
-    is checked exactly (count of changed labels) and NON-convergence
-    within max_rounds RAISES (review r4): silently returning partial
-    labels would leave a cluster with no keeper — its entire membership
-    on the purge list — and break the fixed-point contract the DuckDB
-    recursive-CTE oracle reproduces independently. A chain longer than
-    max_rounds means boilerplate drift; raise max_rounds for such
-    corpora. Each round persists the new label table and unpersists the
-    superseded one — bounded executor storage however many rounds run."""
-    pairs = ngram_jaccard_pairs(documents, threshold).select("a_id", "b_id")
-    return min_label_components(documents.select("doc_id").distinct(),
-                                pairs, "doc_id", max_rounds=max_rounds)
-
-
-def min_label_components(ids: DataFrame, pairs: DataFrame, id_col: str,
-                         max_rounds: int = 16) -> DataFrame:
-    """Connected components by min-label propagation over an undirected
-    pair graph — the shared engine under dedup_clusters (text) and
-    embedding_dup_clusters (vectors). ids: one column `id_col`; pairs:
-    (a_id, b_id). Returns (id_col, cluster_id, is_keeper) with
-    cluster_id = component-min id. One equi-join + hash-agg per round;
-    non-convergence within max_rounds RAISES (silent partial labels
-    would leave a cluster with no keeper — its whole membership on the
-    purge list); each round persists the new label table and unpersists
-    the superseded one."""
-    edges = pairs.unionByName(
-        pairs.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id"))
-    ).localCheckpoint(eager=True)
-    # r7: the propagation loop runs over only the nodes that APPEAR in
-    # the pair graph — a node with no edges can never change its label
-    # (the neighbor-min join contributes nothing), so the full id table
-    # no longer rides every round's join/agg/count; near-dup pair
-    # graphs are a sliver of the corpus, which made each round's tables
-    # corpus-sized for no reason (guide §2.3: don't shuffle rows whose
-    # outcome is already known). Singletons union back at the end with
-    # label = self — exactly what the loop produced for them before.
-    # pnodes stays LAZY over the checkpointed edges (cheap distinct +
-    # semi-join): the first round's convergence count materializes it
-    # into lbl's persist, and the final singles anti-join recomputes it
-    # once more inside its own job — two fewer eager driver actions per
-    # call than checkpoint-and-count (r7: the CC loop's cost at small
-    # scale is almost entirely per-action latency)
-    pnodes = (edges.select(F.col("a_id").alias("_id")).distinct()
-              .join(ids.select(F.col(id_col).alias("_id")), "_id",
-                    "left_semi"))  # membership contract unchanged: only
-    # ids rows ever appear in the output
-    # `held` is the persisted frame itself: unpersist() on a projection
-    # of it (like `lbl` after round 1) matches no cached plan and frees
-    # nothing
-    held = lbl = pnodes.withColumn("label", F.col("_id")).persist()
-    converged = False
-    for _ in range(max_rounds):
-        nb = (edges.join(lbl.select(F.col("_id").alias("b_id"),
-                                    F.col("label").alias("b_label")), "b_id")
-              .groupBy("a_id").agg(F.min("b_label").alias("nb_min")))
-        # the old label rides along as _old so the convergence count
-        # reads straight off `new` — one join per round, not two
-        new = (lbl.join(nb.withColumnRenamed("a_id", "_id"), "_id", "left")
-               .select("_id", F.col("label").alias("_old"),
-                       F.least("label", F.coalesce("nb_min", F.col("label")))
-                       .alias("label"))
-               .persist())
-        changed = new.filter("label != _old").count()
-        held.unpersist()
-        held, lbl = new, new.select("_id", "label")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        new.unpersist()
-        raise RuntimeError(
-            f"min_label_components did not converge within {max_rounds} "
-            f"label-propagation rounds — a duplicate chain longer than "
-            f"that exists (boilerplate drift); raise max_rounds")
-    singles = (ids.select(F.col(id_col).alias("_id"))
-               .join(pnodes, "_id", "left_anti")
-               .withColumn("label", F.col("_id")))
-    return (lbl.unionByName(singles)
-            .select(F.col("_id").alias(id_col),
-                    F.col("label").alias("cluster_id"),
-                    (F.col("_id") == F.col("label")).alias("is_keeper")))
+    Components come from imc.graph.connected_components, which raises
+    rather than return partial labels: a component left split would
+    leave a cluster with no keeper — its entire membership on the purge
+    list — and break the fixed-point contract the DuckDB recursive-CTE
+    oracle reproduces independently."""
+    pairs = ngram_jaccard_pairs(documents, threshold)
+    comp = graph.connected_components(
+        documents.select(F.col("doc_id").alias("id")).distinct(),
+        pairs.select(F.col("a_id").alias("a"), F.col("b_id").alias("b")))
+    return comp.select(F.col("id").alias("doc_id"),
+                       F.col("comp").alias("cluster_id"),
+                       (F.col("id") == F.col("comp")).alias("is_keeper"))
 
 
 def train_split(documents: DataFrame, test_pct: int = 10,

@@ -233,11 +233,11 @@ def test_dedup_clusters_components_and_keepers(spark, docs):
 
 
 def test_dedup_clusters_frees_superseded_label_tables(spark, docs):
-    """Label propagation persists one label table per round; only the
-    last one may stay cached behind the result. The planted pair
-    (200, 201) takes two rounds (one relabel, one convergence check).
-    Dataset caches name their RDD after the cached plan; the unnamed
-    persisted RDDs are localCheckpoints the result still reads."""
+    """The components loop persists a label table, a node mapping and a
+    contracted edge list per round; only the last label table may stay
+    cached behind the result. The planted pair (200, 201) contracts in
+    one round. Dataset caches name their RDD after the cached plan; the
+    unnamed persisted RDDs are localCheckpoints the result still reads."""
     def cached_rdds():
         rdds = spark.sparkContext._jsc.getPersistentRDDs()
         return {int(k) for k in rdds.keySet().toArray()
