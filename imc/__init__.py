@@ -7,14 +7,17 @@ BASELINE.json and Lee/Han/Whang SIGMOD 2007) as DataFrame operators over
 Common-Crawl-style web-page tables.
 
 Layout (SURVEY.md §7.8):
-  kernels.py   pure-numpy geometry kernels (no Spark imports)
+  kernels.py   pure-numpy kernels: geometry, component labels, segment
+               DBSCAN (no Spark imports)
   cells.py     Morton/quadtree cell index (H3/S2-style, from scratch)
   config.py    pipeline parameters (TRACLUS ε / MinLns / γ / weights)
   extract.py   pages → points (extract_text, parse_points pandas UDFs)
   segments.py  points → segments (window lead) + MDL partitioning
   joins.py     ε self-join / kNN join (cell prefilter + exact refine), PIP
-  dbscan.py    segment DBSCAN via agg + connected components (graph.py)
-  graph.py     the connected-components engine (DBSCAN, near-dup clusters)
+  dbscan.py    segment DBSCAN: venue groups (graph.py) + one venue-bucketed
+               numpy pass
+  graph.py     the distributed connected-components engine (DBSCAN venue
+               groups, near-dup clusters)
   sweep.py     representative-trajectory sweep per cluster
   corridors.py corridor polygons: miter-offset buffer of rep polylines
   quality.py   TRACLUS QMeasure clustering-quality metric ([T] §6.2)

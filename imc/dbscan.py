@@ -3,17 +3,20 @@
 [T] §4.2 Fig. 12 is a sequential queue expansion; in bulk form, after the
 ε-join produced the full ε-graph:
 
-  1. cores: |Nε(L)| ≥ MinLns, where Nε includes L itself ([T] Defn 6) —
-     one hash aggregation over the symmetrized pair list.
-  2. clusters = connected components of the core-core subgraph
-     (imc.graph.connected_components: contracting rounds, so a hot-cell
-     near-clique of O(n²) edges collapses to one supernode in round 1).
-  3. border segments attach to the minimum adjacent core label
-     (deterministic; the paper's queue order is first-come-first-served,
-     which is not reproducible in parallel — pinned to min).
-  4. clusters with |PTR(C)| < MinLns distinct trajectories are discarded
-     ([T] Defn 8, Fig. 12 step 3).
-  5. canonical cluster ids: dense_rank over the component's min seg_id so
+  1. venue groups: ε-pairs cross venues only at venue borders, so the
+     venues linked by cross-venue pairs form groups
+     (imc.graph.connected_components over the venue-adjacency graph —
+     usually edgeless, and then one fill job), and every ε-edge lies
+     inside one group.
+  2. one cogrouped pass: segments and pairs are hash-bucketed by venue
+     group, and one numpy kernel per bucket (kernels.dbscan_segments)
+     computes cores (|Nε(L)| ≥ MinLns, Nε including L, [T] Defn 6), the
+     connected components of the core-core subgraph, border attachment
+     to the minimum adjacent core component (the paper's queue order is
+     first-come-first-served, which is not reproducible in parallel —
+     pinned to min), and the |PTR(C)| ≥ MinLns filter ([T] Defn 8,
+     Fig. 12 step 3).
+  3. canonical cluster ids: dense rank over the component's min seg_id so
      output ids are deterministic and fixture-comparable.
 
 Returns assignments(seg_id, cluster_id, is_core) — noise segments are
@@ -22,30 +25,20 @@ absent (the reference marks them noise and drops them from clusters).
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from imc import graph
-from imc.config import IMCParams
+from imc import graph, kernels
+from imc.config import VENUE_STRIDE, IMCParams, python_stage_partitions
+from imc.segments import SEG_ID_STRIDE
+
+_COMP_SCHEMA = "seg_id long, comp long, is_core boolean"
 
 
-def symmetrize(eps_pairs: DataFrame) -> DataFrame:
-    """(a,b) canonical pairs → both directions (src, dst)."""
-    ab = eps_pairs.select(F.col("a_seg").alias("src"), F.col("b_seg").alias("dst"))
-    ba = eps_pairs.select(F.col("b_seg").alias("src"), F.col("a_seg").alias("dst"))
-    return ab.unionByName(ba)
-
-
-def core_segments(segments: DataFrame, eps_pairs: DataFrame,
-                  params: IMCParams) -> DataFrame:
-    """(seg_id, n_eps, is_core); n_eps counts the segment itself."""
-    deg = (symmetrize(eps_pairs)
-           .groupBy("src").agg(F.count("*").alias("n_nbrs")))
-    return (segments.select("seg_id")
-            .join(deg, segments.seg_id == deg.src, "left")
-            .select("seg_id",
-                    (F.coalesce(F.col("n_nbrs"), F.lit(0)) + 1).alias("n_eps"))
-            .withColumn("is_core", F.col("n_eps") >= F.lit(params.min_lns)))
+def _venue(col: str):
+    return F.expr(f"`{col}` div {SEG_ID_STRIDE * VENUE_STRIDE}")
 
 
 def rank_components(comps: DataFrame) -> DataFrame:
@@ -61,11 +54,8 @@ def rank_components(comps: DataFrame) -> DataFrame:
     (running sum over ONE ROW PER VENUE — the only single-task step,
     venue-count-sized) reproduces the exact same total order, hence
     bit-identical cluster ids (oracle-gated via imc_assignments)."""
-    from imc.config import VENUE_STRIDE
-    from imc.segments import SEG_ID_STRIDE
-    v = F.expr(f"comp div {SEG_ID_STRIDE * VENUE_STRIDE}")
     wv = Window.partitionBy("_v").orderBy("comp")
-    ranked = (comps.withColumn("_v", v)
+    ranked = (comps.withColumn("_v", _venue("comp"))
               .withColumn("_r", F.row_number().over(wv)))
     wo = Window.orderBy("_v").rowsBetween(Window.unboundedPreceding, -1)
     offs = (ranked.groupBy("_v").agg(F.count("*").alias("_n"))
@@ -77,47 +67,49 @@ def rank_components(comps: DataFrame) -> DataFrame:
 
 def dbscan(segments: DataFrame, eps_pairs: DataFrame,
            params: IMCParams | None = None) -> DataFrame:
-    """assignments(seg_id, cluster_id, is_core) — SURVEY.md §2.8."""
+    """assignments(seg_id, cluster_id, is_core) — SURVEY.md §2.8.
+
+    One bucket's segments and pairs are held in one Python worker, and a
+    single huge venue group is one task: the same scale posture as
+    raster.extract_polygons' per-venue grid."""
     params = params or IMCParams()
-    # cut lineage ONCE: eps_pairs is consumed by several branches below
-    # (degrees, core edges, border attach); an unmaterialized ε-join plan
-    # embedded that many times blows up driver-side optimization (the
-    # staged refine projections re-optimize per reference — observed OOM
-    # at default 1g driver heap). localCheckpoint is a no-op-ish scan for
-    # already-materialized inputs (the pipeline passes parquet-backed
-    # pairs) and caps plan size for direct callers.
-    eps_pairs = eps_pairs.localCheckpoint(eager=True)
-    cores = core_segments(segments, eps_pairs, params).filter("is_core")
-    core_ids = cores.select("seg_id").localCheckpoint(eager=True)
+    min_lns = params.min_lns
+    # cut lineage ONCE: the pairs feed both the venue-group edges and the
+    # cogroup, and an unmaterialized ε-join plan (a direct caller's) would
+    # otherwise run once per reference
+    pairs = eps_pairs.select("a_seg", "b_seg").localCheckpoint(eager=True)
 
-    core_pairs = (eps_pairs
-                  .join(core_ids.withColumnRenamed("seg_id", "a_seg"), "a_seg", "left_semi")
-                  .join(core_ids.withColumnRenamed("seg_id", "b_seg"), "b_seg", "left_semi")
-                  .select(F.col("a_seg").alias("a"), F.col("b_seg").alias("b")))
-    comp = (graph.connected_components(core_ids.withColumnRenamed("seg_id", "id"),
-                                       core_pairs)
-            .withColumnRenamed("id", "seg_id"))
+    cross = (pairs.select(_venue("a_seg").alias("a"), _venue("b_seg").alias("b"))
+             .filter("a != b"))
+    groups = graph.connected_components(
+        cross.select(F.col("a").alias("id"))
+        .union(cross.select(F.col("b").alias("id"))).distinct(),
+        cross)
 
-    sym = symmetrize(eps_pairs)
+    n = python_stage_partitions(segments.sparkSession)
 
-    # border attachment: non-core neighbors of cores take min adjacent comp
-    border = (sym
-              .join(core_ids.withColumnRenamed("seg_id", "dst"), "dst", "left_semi")
-              .join(core_ids.withColumnRenamed("seg_id", "src"), "src", "left_anti")
-              .join(comp.withColumnRenamed("seg_id", "dst"), "dst")
-              .groupBy("src").agg(F.min("comp").alias("comp"))
-              .select(F.col("src").alias("seg_id"), "comp"))
+    def bucketed(df: DataFrame, key: str) -> DataFrame:
+        # a venue's group is itself unless a cross-venue pair links it;
+        # the explicit count keeps AQE from coalescing the kernel stage
+        group = F.coalesce("comp", "_venue")
+        return (df.withColumn("_venue", _venue(key))
+                .join(groups.withColumnRenamed("id", "_venue"), "_venue", "left")
+                .select(*df.columns,
+                        F.pmod(F.hash(group), F.lit(n)).alias("_bucket"))
+                .repartition(n, "_bucket"))
 
-    assigned = (comp.select("seg_id", "comp").withColumn("is_core", F.lit(True))
-                .unionByName(border.withColumn("is_core", F.lit(False))))
+    def cluster(segs: pd.DataFrame, prs: pd.DataFrame) -> pd.DataFrame:
+        seg_id, comp, is_core = kernels.dbscan_segments(
+            segs["seg_id"].to_numpy(np.int64), segs["traj_id"].to_numpy(np.int64),
+            prs["a_seg"].to_numpy(np.int64), prs["b_seg"].to_numpy(np.int64),
+            min_lns)
+        return pd.DataFrame({"seg_id": seg_id, "comp": comp, "is_core": is_core})
 
-    # |PTR(C)| ≥ MinLns filter ([T] Defn 8): distinct trajectories per comp
-    with_traj = assigned.join(segments.select("seg_id", "traj_id"), "seg_id")
-    keep = (with_traj.groupBy("comp")
-            .agg(F.countDistinct("traj_id").alias("n_traj"))
-            .filter(F.col("n_traj") >= F.lit(params.min_lns))
-            .select("comp"))
-    surviving = assigned.join(keep, "comp", "left_semi")
+    segs = bucketed(segments.select("seg_id", "traj_id"), "seg_id")
+    surviving = (segs.groupBy("_bucket")
+                 .cogroup(bucketed(pairs, "a_seg").groupBy("_bucket"))
+                 .applyInPandas(cluster, _COMP_SCHEMA)
+                 .localCheckpoint(eager=True))
 
     # canonical ids: dense rank of comp labels — ranked on the DISTINCT
     # comp set (one row per cluster) via the two-level venue rank (no

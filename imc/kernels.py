@@ -39,6 +39,8 @@ __all__ = [
     "sweep_representative",
     "log2s",
     "log2f",
+    "label_components",
+    "dbscan_segments",
 ]
 
 _EPS = 1e-12
@@ -612,3 +614,101 @@ def sweep_representative(segs: np.ndarray, min_lns: int, gamma: float,
     if with_spread:
         return np.stack([bx, by, arr[:, 2]], axis=1)
     return np.stack([bx, by], axis=1)
+
+
+def label_components(n: int, a, b) -> tuple[np.ndarray, int]:
+    """Connected components of nodes 0..n−1 under undirected edges
+    (a[k], b[k]): (lab, rounds), lab[i] = the minimum node of i's
+    component.
+
+    Hook and shortcut: every round each tree root hooks onto the smallest
+    root adjacent to its tree (np.minimum.at), then pointer jumping runs
+    to a fixed point, so every tree is a star again. Pointers only ever
+    decrease, so trees stay acyclic and each root is its tree's minimum.
+    A star with no smaller neighbour does not hook; if no star hooked
+    onto it either, its neighbours all joined trees with smaller roots,
+    so it hooks in the next round. Two rounds therefore at least halve
+    the stars of every unfinished component, and more than
+    2·bit_length(n) + 2 rounds means a defect: RuntimeError."""
+    a = np.asarray(a, dtype=np.int64)
+    b = np.asarray(b, dtype=np.int64)
+    lab = np.arange(n, dtype=np.int64)
+    bound = 2 * max(n, 1).bit_length() + 2
+    rounds = 0
+    while True:
+        la, lb = lab[a], lab[b]
+        cross = la != lb
+        if not cross.any():
+            return lab, rounds
+        if rounds == bound:
+            raise RuntimeError(
+                f"label_components: {int(cross.sum())} edges still join "
+                f"two trees after {bound} rounds")
+        rounds += 1
+        la, lb = la[cross], lb[cross]
+        np.minimum.at(lab, la, lb)
+        np.minimum.at(lab, lb, la)
+        while True:
+            nxt = lab[lab]
+            if np.array_equal(nxt, lab):
+                break
+            lab = nxt
+
+
+def dbscan_segments(seg_id, traj_id, a_seg, b_seg, min_lns: int):
+    """Line-segment DBSCAN ([T] §4.2) over one ε-graph held in memory:
+    segments (seg_id, traj_id) and their ε-pairs (a_seg, b_seg), each
+    unordered pair once. Returns (seg_id, comp, is_core) arrays of the
+    clustered segments; comp is the minimum seg_id of the cluster's core
+    component, noise segments are absent.
+
+      1. |Nε(L)| = 1 + the pairs L is in; cores have |Nε| ≥ MinLns.
+      2. clusters = connected components of the core-core pairs.
+      3. a non-core segment with a core neighbour joins the minimum
+         adjacent comp (the paper's first-come queue order is not
+         reproducible in parallel; min is).
+      4. clusters with |PTR(C)| < MinLns distinct trajectories go.
+
+    A pair endpoint that is not among the segments counts towards its
+    partner's |Nε| but is never assigned: it has no trajectory."""
+    seg_id = np.asarray(seg_id, dtype=np.int64)
+    order = np.argsort(seg_id, kind="stable")
+    sid = seg_id[order]
+    tid = np.asarray(traj_id, dtype=np.int64)[order]
+    n = len(sid)
+    if n == 0:
+        return sid, sid.copy(), np.zeros(0, bool)
+
+    def index(ids):
+        ids = np.asarray(ids, dtype=np.int64)
+        i = np.minimum(np.searchsorted(sid, ids), n - 1)
+        return i, sid[i] == ids
+
+    ia, fa = index(a_seg)
+    ib, fb = index(b_seg)
+    n_eps = 1 + (np.bincount(ia[fa], minlength=n)
+                 + np.bincount(ib[fb], minlength=n))
+    core = n_eps >= min_lns
+
+    both = fa & fb
+    ca, cb = core[ia] & both, core[ib] & both
+    cc = ca & cb
+    lab, _ = label_components(n, ia[cc], ib[cc])
+    none = np.iinfo(np.int64).max
+    comp = np.where(core, sid[lab], none)
+
+    # border attachment over the pairs with exactly one core endpoint
+    # (the core-core pairs lie inside one comp already)
+    attach = comp.copy()
+    ab = ca & ~cb
+    ba = cb & ~ca
+    np.minimum.at(attach, ib[ab], comp[ia[ab]])
+    np.minimum.at(attach, ia[ba], comp[ib[ba]])
+
+    # |PTR(C)| ≥ MinLns: distinct (comp, traj) pairs counted per comp
+    assigned = attach != none
+    comp_traj = np.unique(np.stack([attach[assigned], tid[assigned]], axis=1),
+                          axis=0)
+    comps, n_traj = np.unique(comp_traj[:, 0], return_counts=True)
+    keep = np.isin(attach, comps[n_traj >= min_lns])
+    return sid[keep], attach[keep], core[keep]

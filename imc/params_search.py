@@ -18,7 +18,13 @@ from pyspark.sql import functions as F
 
 from imc import joins
 from imc.config import IMCParams
-from imc.dbscan import symmetrize
+
+
+def symmetrize(eps_pairs: DataFrame) -> DataFrame:
+    """(a,b) canonical pairs → both directions (src, dst)."""
+    ab = eps_pairs.select(F.col("a_seg").alias("src"), F.col("b_seg").alias("dst"))
+    ba = eps_pairs.select(F.col("b_seg").alias("src"), F.col("a_seg").alias("dst"))
+    return ab.unionByName(ba)
 
 
 def neighborhood_entropy(segments: DataFrame, eps: float,

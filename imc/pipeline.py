@@ -3,7 +3,7 @@
 pages ─filter/dedupe/extract/parse─► points
       ─lead window + MDL grouped-map─► segments
       ─cell cover + salted equi-join + refine─► eps_pairs
-      ─core agg + connected components─► assignments
+      ─venue groups + bucketed numpy DBSCAN─► assignments
       ─per-cluster sweep─► rep_points
       ─Bresenham explode + count─► raster ─► polygons
       ─broadcast PIP─► tile_assignments

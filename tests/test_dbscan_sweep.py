@@ -1,20 +1,23 @@
 """Distributed DBSCAN + sweep vs the brute-force union-find oracle
 (SURVEY.md §5.2-2/-3) on MDL-partitioned fixture segments."""
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from fixtures import gen_pages, oracle
 from imc import dbscan, extract, joins, kernels, segments, sweep
-from imc.config import IMCParams
+from imc.config import VENUE_STRIDE, IMCParams
 
 PARAMS = IMCParams(eps=1.2, min_lns=3)
 
 
-@pytest.fixture(scope="module")
-def fixture_data(spark):
-    path = gen_pages.ensure_pages(sf=0.001)
+def _segments_and_pairs(spark, seed=42):
+    path = gen_pages.ensure_pages(sf=0.001, seed=seed)
     pages = spark.read.parquet(path)
     pts = extract.pages_to_points(pages)
     seg_df = segments.mdl_segments(pts)
@@ -24,10 +27,12 @@ def fixture_data(spark):
     return seg_df, pairs
 
 
-def test_dbscan_matches_oracle(spark, fixture_data):
-    seg_df, pairs = fixture_data
-    got = dbscan.dbscan(seg_df, pairs, PARAMS).toPandas()
+@pytest.fixture(scope="module")
+def fixture_data(spark):
+    return _segments_and_pairs(spark)
 
+
+def _assert_matches_oracle(seg_df, got):
     pdf = seg_df.toPandas().sort_values("seg_id")
     want = oracle.dbscan_oracle(
         pdf["seg_id"].to_numpy(np.int64),
@@ -41,6 +46,72 @@ def test_dbscan_matches_oracle(spark, fixture_data):
     pd.testing.assert_frame_equal(
         got_s.astype({"seg_id": "int64", "cluster_id": "int64", "is_core": "bool"}),
         want_s.astype({"seg_id": "int64", "cluster_id": "int64", "is_core": "bool"}))
+
+
+def test_dbscan_matches_oracle(spark, fixture_data):
+    seg_df, pairs = fixture_data
+    _assert_matches_oracle(seg_df, dbscan.dbscan(seg_df, pairs, PARAMS).toPandas())
+
+
+def test_dbscan_cross_venue_groups_match_oracle(spark, fixture_data):
+    """The fixture's segments of trajectories with traj_id % 10 < 3,
+    copied into venues 0, 1, 7 and 3 at x-offsets 0, 0.4, 0.9 and
+    5000 m: venues 0, 1 and 7 chain through cross-venue ε-pairs into one
+    venue group whose components span venues, venue 3 stays alone. The
+    venue-bucketed pass must equal the oracle over all four."""
+    seg_df, _ = fixture_data
+    base = seg_df.filter(F.col("traj_id") % 10 < 3)
+    copies = []
+    for venue, dx in ((0, 0.0), (1, 0.4), (7, 0.9), (3, 5000.0)):
+        tid = F.col("traj_id") % VENUE_STRIDE + venue * VENUE_STRIDE
+        copies.append(base.select(
+            (tid * segments.SEG_ID_STRIDE
+             + F.col("seg_id") % segments.SEG_ID_STRIDE).alias("seg_id"),
+            tid.alias("traj_id"),
+            (F.col("x1") + dx).alias("x1"), "y1",
+            (F.col("x2") + dx).alias("x2"), "y2"))
+    segs = reduce(DataFrame.unionByName, copies).localCheckpoint(eager=True)
+    pairs = joins.eps_join(segs, PARAMS).localCheckpoint(eager=True)
+
+    stride = segments.SEG_ID_STRIDE * VENUE_STRIDE
+    venue_pairs = {(int(r["a"]), int(r["b"])) for r in pairs.select(
+        F.expr(f"a_seg div {stride}").alias("a"),
+        F.expr(f"b_seg div {stride}").alias("b")).distinct().collect()}
+    assert {(0, 1), (1, 7)} <= venue_pairs
+    assert not any(3 in p for p in venue_pairs if p != (3, 3))
+
+    _assert_matches_oracle(segs, dbscan.dbscan(segs, pairs, PARAMS).toPandas())
+
+
+def _dbscan_jobs(spark, seg_df, pairs) -> int:
+    """Spark jobs one dbscan build + noop write starts."""
+    sc = spark.sparkContext
+    group = f"dbscan-jobs-{id(seg_df)}"
+    sc.setJobGroup(group, group)
+    try:
+        (dbscan.dbscan(seg_df, pairs, PARAMS)
+         .write.format("noop").mode("overwrite").save())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dbscan_job_count_is_small_and_seed_free(spark, fixture_data):
+    """A constant number of Spark jobs, whatever the ε-graph: the density
+    step is one cogrouped pass, and the distributed connected-components
+    rounds run only on the (here edgeless) venue-adjacency graph. Fixture
+    seeds 42 and 7 start the same count."""
+    seg_df, pairs = fixture_data
+    seg7, pairs7 = _segments_and_pairs(spark, seed=7)
+    try:
+        n42 = _dbscan_jobs(spark, seg_df, pairs)
+        n7 = _dbscan_jobs(spark, seg7, pairs7)
+    finally:
+        seg7.unpersist()
+        pairs7.unpersist()
+    assert n42 <= 20, n42
+    assert n42 == n7, (n42, n7)
 
 
 def test_dbscan_invariants(spark, fixture_data):

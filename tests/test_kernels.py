@@ -293,3 +293,106 @@ def test_grid_traverse_batch_equals_scalar():
             got = set(zip(gx[sel].tolist(), gy[sel].tolist()))
             assert got == want, (i, cell)
             assert sel.sum() == len(got)  # no duplicate cells per segment
+
+
+# ---------- connected components and segment DBSCAN ----------
+
+def _uf_labels(n, a, b):
+    from fixtures.oracle import _UF
+    uf = _UF(n)
+    for x, y in zip(a.tolist(), b.tolist()):
+        uf.union(x, y)
+    return np.array([uf.find(i) for i in range(n)], dtype=np.int64)
+
+
+def test_label_components_matches_union_find():
+    """Random sparse graphs with isolated ids, planted cliques and
+    duplicate, reversed and self-loop edges: labels equal the union-find
+    oracle's (its roots are component minima too)."""
+    rng = np.random.default_rng(11)
+    for _ in range(150):
+        n = int(rng.integers(1, 120))
+        m = int(rng.integers(0, 2 * n))
+        a = rng.integers(0, n, m)
+        b = rng.integers(0, n, m)
+        clique = rng.choice(n, size=min(n, int(rng.integers(1, 8))),
+                            replace=False)
+        ca, cb = np.meshgrid(clique, clique)
+        a = np.concatenate([a, ca.ravel(), b[: m // 3]])
+        b = np.concatenate([b, cb.ravel(), a[: m // 3]])
+        lab, _ = kernels.label_components(n, a, b)
+        np.testing.assert_array_equal(lab, _uf_labels(n, a, b))
+    lab, rounds = kernels.label_components(5, [], [])
+    assert lab.tolist() == [0, 1, 2, 3, 4] and rounds == 0
+
+
+def test_label_components_shuffled_path_rounds():
+    """A 10⁴-node path with shuffled ids: one component, and the hooking
+    rounds stay logarithmic — well under the raise-on-exceed bound of
+    2·bit_length(n) + 2 = 30 (9 at this seed)."""
+    n = 10_000
+    perm = np.random.default_rng(5).permutation(n)
+    lab, rounds = kernels.label_components(n, perm[:-1], perm[1:])
+    assert (lab == 0).all()
+    assert rounds <= 12
+    # ids increasing along the path (consecutive seg_ids of one
+    # trajectory) collapse in one round
+    lab, rounds = kernels.label_components(n, np.arange(n - 1), np.arange(1, n))
+    assert (lab == 0).all() and rounds == 1
+
+
+def _fixture_segments():
+    """MDL segments of the sf0.001 fixture's ground-truth points, built
+    without Spark: (seg_id, traj_id, xy[n, 4])."""
+    from fixtures import gen_pages
+    from imc.segments import SEG_ID_STRIDE
+    pts = gen_pages.truth_points(sf=0.001)
+    sid, tid, xy = [], [], []
+    for t, g in pts.groupby("traj_id"):
+        g = g.sort_values("seq")
+        p = g[["x", "y"]].to_numpy(np.float64)
+        seq = g["seq"].to_numpy(np.int64)
+        cp = kernels.mdl_partition(p)
+        if len(cp) < 2:
+            continue
+        sid.append(t * SEG_ID_STRIDE + seq[cp[:-1]])
+        tid.append(np.full(len(cp) - 1, t, dtype=np.int64))
+        xy.append(np.hstack([p[cp[:-1]], p[cp[1:]]]))
+    sid, tid, xy = np.concatenate(sid), np.concatenate(tid), np.vstack(xy)
+    keep = kernels.segment_length(*xy.T) > 0
+    return sid[keep], tid[keep], xy[keep]
+
+
+def test_dbscan_segments_matches_oracle():
+    """The whole density step on the fixture's ε-graph equals the
+    union-find oracle, cluster ids ranked densely over comp."""
+    from fixtures import oracle
+    sid, tid, xy = _fixture_segments()
+    eps, min_lns = 1.2, 3
+    pairs = oracle.eps_pairs_oracle(sid, xy, eps)
+    # input order must not matter: shuffle segments and pairs
+    rng = np.random.default_rng(2)
+    o, q = rng.permutation(len(sid)), rng.permutation(len(pairs))
+    seg_id, comp, is_core = kernels.dbscan_segments(
+        sid[o], tid[o], pairs["a_seg"].to_numpy()[q],
+        pairs["b_seg"].to_numpy()[q], min_lns)
+    want = (oracle.dbscan_oracle(sid, tid, xy, eps, min_lns)
+            .sort_values("seg_id").reset_index(drop=True))
+    assert len(want) > 0 and want["cluster_id"].nunique() >= 3
+    np.testing.assert_array_equal(seg_id, want["seg_id"].to_numpy(np.int64))
+    np.testing.assert_array_equal(np.unique(comp, return_inverse=True)[1],
+                                  want["cluster_id"].to_numpy(np.int64))
+    np.testing.assert_array_equal(is_core, want["is_core"].to_numpy(bool))
+
+
+def test_dbscan_segments_absent_endpoints():
+    """A pair endpoint outside the segments counts towards its partner's
+    |Nε| but is never assigned; no segments at all gives no rows."""
+    seg_id, comp, is_core = kernels.dbscan_segments(
+        [5, 6, 8], [1, 2, 3], [5, 5, 6], [6, 7, 8], min_lns=3)
+    # 5 is core only through the pair (5, 7); 7 appears nowhere
+    assert seg_id.tolist() == [5, 6, 8]
+    assert comp.tolist() == [5, 5, 5]
+    assert is_core.tolist() == [True, True, False]
+    out = kernels.dbscan_segments([], [], [1, 2], [2, 3], min_lns=3)
+    assert [len(a) for a in out] == [0, 0, 0]
