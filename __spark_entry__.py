@@ -36,6 +36,8 @@ Query groups (SURVEY.md §2 coverage):
 from __future__ import annotations
 
 import dataclasses
+import glob
+import hashlib
 import os
 import sys
 from collections.abc import Callable
@@ -66,15 +68,29 @@ def _fixture_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(gen_pages.ensure_pages(sf=_sf_of(sf_dir)))
 
 
+_IMC_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "imc")
+
+
+def _imc_digest() -> str:
+    """Digest of the imc/*.py sources (names and bytes)."""
+    h = hashlib.sha256()
+    for p in sorted(glob.glob(os.path.join(_IMC_DIR, "*.py"))):
+        h.update(os.path.basename(p).encode() + b"\0")
+        with open(p, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()[:16]
+
+
 def _seg_cache_name() -> str:
-    # cache keyed by the params hash: a changed PARAMS (or any config field)
-    # must regenerate the derived fixtures instead of silently serving
-    # results computed under the old configuration
-    return f"segments_{PARAMS.params_hash()}.parquet"
+    # cache keyed by the params hash AND the engine sources: a changed
+    # PARAMS (or any config field) or a changed operator must regenerate
+    # the derived fixtures instead of silently serving results computed
+    # under the old configuration or by older code
+    return f"segments_{PARAMS.params_hash()}_{_imc_digest()}.parquet"
 
 
 def _assign_cache_name() -> str:
-    return f"assignments_{PARAMS.params_hash()}.parquet"
+    return f"assignments_{PARAMS.params_hash()}_{_imc_digest()}.parquet"
 
 
 def _fixture_segments(spark: SparkSession, sf_dir: str) -> DataFrame:

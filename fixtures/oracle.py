@@ -116,6 +116,23 @@ def dbscan_oracle(seg_ids: np.ndarray, traj_ids: np.ndarray, segs: np.ndarray,
                         columns=["seg_id", "cluster_id", "is_core"])
 
 
+def tile_assignments_oracle(segs: pd.DataFrame, tiles: pd.DataFrame,
+                            venue_stride: int) -> dict:
+    """seg_id -> the lowest tile_id of the segment's venue (traj_id //
+    venue_stride) whose ring contains the segment midpoint (scalar
+    kernels.point_in_polygon per tile), -1 when none contains it."""
+    by_venue: dict[int, list] = {}
+    for t in tiles.sort_values("tile_id").itertuples():
+        by_venue.setdefault(int(t.venue), []).append(
+            (int(t.tile_id), np.array([[p["x"], p["y"]] for p in t.ring])))
+    want = {}
+    for r in segs.itertuples():
+        px, py = (r.x1 + r.x2) / 2, (r.y1 + r.y2) / 2
+        want[int(r.seg_id)] = next(
+            (tid for tid, ring in by_venue.get(int(r.traj_id) // venue_stride, [])
+             if kernels.point_in_polygon([px], [py], ring)[0]), -1)
+    return want
+
 def sweep_oracle(segs: np.ndarray, min_lns: int, gamma: float) -> np.ndarray:
     """Scalar re-derivation of the sweep ([T] §4.3) — per-endpoint loops,
     no shared code path with the kernel beyond the pinned conventions."""

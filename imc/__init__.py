@@ -13,7 +13,8 @@ Layout (SURVEY.md §7.8):
   config.py    pipeline parameters (TRACLUS ε / MinLns / γ / weights)
   extract.py   pages → points (extract_text, parse_points pandas UDFs)
   segments.py  points → segments (window lead) + MDL partitioning
-  joins.py     ε self-join / kNN join (cell prefilter + exact refine), PIP
+  joins.py     ε self-join / kNN join (cell prefilter + exact refine),
+               PIP tile assignment (venue-keyed join to ring edges)
   dbscan.py    segment DBSCAN: venue groups (graph.py) + one venue-bucketed
                numpy pass
   graph.py     the distributed connected-components engine (DBSCAN venue
@@ -22,8 +23,7 @@ Layout (SURVEY.md §7.8):
   corridors.py corridor polygons: miter-offset buffer of rep polylines
   quality.py   TRACLUS QMeasure clustering-quality metric ([T] §6.2)
   raster.py    rasterize segments / raster→vector polygon extraction
-  manifest.py  iceberg-lite snapshot/resume manifests over parquet,
-               bucketed co-located tables
+  manifest.py  iceberg-lite snapshot/resume manifests over parquet
   pipeline.py  end-to-end run (EP1) + incremental snapshot-diff mode
   textops.py   web-corpus ops: dedup (exact/minhash/simhash), langid,
                quality, token counts, fingerprints

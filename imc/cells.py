@@ -90,16 +90,3 @@ def segment_cover(x1: float, y1: float, x2: float, y2: float, cell_size: float,
         cells = (cells[:, None, :] + offs[None, :, :]).reshape(-1, 2)
     codes = morton_encode(cells[:, 0], cells[:, 1])
     return np.unique(codes)
-
-
-def covers_batch(x1, y1, x2, y2, cell_size: float, dilate: bool = False,
-                 ox: float = 0.0, oy: float = 0.0) -> list:
-    """Batched segment_cover → list of int64 arrays (one per row). Feeds a
-    Series→Series pandas UDF returning ARRAY<BIGINT>."""
-    n = len(x1)
-    x1 = np.asarray(x1, dtype=np.float64)
-    y1 = np.asarray(y1, dtype=np.float64)
-    x2 = np.asarray(x2, dtype=np.float64)
-    y2 = np.asarray(y2, dtype=np.float64)
-    return [segment_cover(x1[i], y1[i], x2[i], y2[i], cell_size, dilate, ox, oy)
-            for i in range(n)]

@@ -1,18 +1,19 @@
 """Connected components of an undirected graph — the one engine behind
-DBSCAN's core-segment ε-graph ([T] §4.2) and the near-duplicate pair
-graphs of textops.dedup_clusters and similarity.embedding_dup_clusters.
+DBSCAN's venue-adjacency graph (venues linked by cross-venue ε-pairs,
+imc/dbscan.py) and the near-duplicate pair graphs of
+textops.dedup_clusters and similarity.embedding_dup_clusters.
 
 Contracting min-priority labelling with one pointer jump per round
 (Kiveris et al., "Connected Components in MapReduce and Beyond", SoCC
 2014). Each round, every supernode of the contracted edge list moves to
 the minimum-priority node of its closed neighbourhood, then one step
 further along that node's own move; the edge list is rewritten onto the
-new supernodes, deduped, and stripped of self-loops. A clique (a hot-cell
-DBSCAN component, a near-duplicate cluster) collapses to one supernode in
-round 1 and its O(n²) edges vanish; the loop ends when no edge is left.
+new supernodes, deduped, and stripped of self-loops. A clique (a
+near-duplicate cluster) collapses to one supernode in round 1 and its
+O(n²) edges vanish; the loop ends when no edge is left.
 
 A node's priority is (xxhash64(id), id), not its id: by id, a path whose
-ids increase along it (consecutive seg_ids of one trajectory) needs O(n)
+ids increase along it (consecutive ids along a chain) needs O(n)
 rounds; hashed priorities make local minima frequent on any id layout,
 O(log n) rounds. One aggregate at the end relabels each component,
 whose surviving supernode is an arbitrary member, to its minimum id.

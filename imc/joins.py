@@ -35,24 +35,23 @@ kNN join: the same cover primitive at an expanding probe-side radius R
 (base side unexpanded); a probe settles once its k-th distance provably
 beats anything outside R. Exact, no full-base broadcast anywhere.
 
-Point-in-polygon tile assignment: tiles are a SMALL polygon set
-(BASELINE.json:6 "broadcast of small polygon sets") — shipped into a
-pandas-UDF closure; vectorized bbox prefilter + even-odd ray crossing;
-map-side only, zero shuffle.
+Point-in-polygon tile assignment: one Catalyst plan. Tile rings are
+exploded into edges and each segment midpoint is left-joined to its own
+venue's edges under the even-odd crossing predicate; an aggregate per
+seg_id keeps the lowest tile crossed an odd number of times. The planner
+broadcasts the edge table when the polygon set is small (BASELINE.json:6
+"broadcast of small polygon sets") and shuffle-joins on venue otherwise —
+no Python worker, no driver collect.
 """
 
 from __future__ import annotations
 
 import os
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
-from imc import kernels
 from imc.config import VENUE_STRIDE, IMCParams
 
 _COORDS = ["x1", "y1", "x2", "y2"]
@@ -95,7 +94,7 @@ def _ensure_parallelism(df: DataFrame, factor: int = 2,
     plus Spark's own bin-packing parameters (driver-side metadata, no
     job, no physical planning) instead of the RDD partition count, which
     forced eager physical planning + an RDD conversion at
-    operator-construction time for every eps_join/kNN/PIP call (VERDICT
+    operator-construction time for every eps_join/kNN call (VERDICT
     r03 #5; the no-RDD rule is grep-gated). Raw file COUNT is the wrong
     proxy in both directions (review r4): 64 tiny files pack into ~2
     scan partitions (maxPartitionBytes/openCostInBytes) yet would look
@@ -708,178 +707,52 @@ def knn_join(probes: DataFrame, base: DataFrame, k: int,
 
 TRAJ_VENUE_STRIDE = VENUE_STRIDE  # single source: imc.config
 
-
-class _PackedTiles:
-    """Broadcast payload of the PIP: all tile rings packed into FLAT numpy
-    arrays (tile_ids, venues, per-tile bboxes, ring vertex offsets, one
-    (total_pts, 2) coordinate block). A dict of 100k+ per-venue Python
-    lists pickles in tens of seconds and made the PIP stage wall-time flat
-    across core counts (each Python worker paid the deserialize); flat
-    arrays pickle as raw buffers in milliseconds. Tiles are sorted by
-    (venue, tile_id); venue slices found by searchsorted."""
-
-    def __init__(self, tiles_pdf: pd.DataFrame, venue_keyed: bool):
-        df = tiles_pdf.copy()
-        if not venue_keyed:
-            df["venue"] = 0
-        df = df.sort_values(["venue", "tile_id"])
-        rings = [np.array([[p["x"], p["y"]] for p in r], dtype=np.float64)
-                 for r in df["ring"]]
-        self.tile_ids = df["tile_id"].to_numpy(np.int64)
-        self.venues = df["venue"].to_numpy(np.int64)
-        self.offsets = np.concatenate(
-            [[0], np.cumsum([r.shape[0] for r in rings])]).astype(np.int64)
-        self.coords = (np.concatenate(rings, axis=0) if rings
-                       else np.zeros((0, 2), dtype=np.float64))
-        self.bbox = np.stack([
-            np.array([r[:, 0].min() for r in rings]),
-            np.array([r[:, 0].max() for r in rings]),
-            np.array([r[:, 1].min() for r in rings]),
-            np.array([r[:, 1].max() for r in rings]),
-        ], axis=1) if rings else np.zeros((0, 4))
-
-    def venue_slice(self, v: int) -> range:
-        lo = int(np.searchsorted(self.venues, v, side="left"))
-        hi = int(np.searchsorted(self.venues, v, side="right"))
-        return range(lo, hi)
-
-    def assign(self, px: np.ndarray, py: np.ndarray, tile_range,
-               out: np.ndarray, sel: np.ndarray) -> None:
-        """Vectorized bbox-prefiltered even-odd PIP over one tile range;
-        writes tile ids into out[sel] (lowest tile_id wins — pinned)."""
-        unassigned = sel.copy()
-        for t in tile_range:
-            x0, x1b, y0, y1b = self.bbox[t]
-            mask = unassigned & (px >= x0) & (px <= x1b) & (py >= y0) & (py <= y1b)
-            if not mask.any():
-                continue
-            ring = self.coords[self.offsets[t]:self.offsets[t + 1]]
-            inside = kernels.point_in_polygon(px[mask], py[mask], ring)
-            idx = np.nonzero(mask)[0][inside]
-            out[idx] = self.tile_ids[t]
-            unassigned[idx] = False
+_TILES_SCHEMA = "tile_id long, venue long, ring array<struct<x:double,y:double>>"
 
 
-def tile_assignments(segments: DataFrame, tiles_pdf: pd.DataFrame) -> DataFrame:
-    """Assign each segment (midpoint test) to the containing map tile.
-    Broadcast nested-loop → vectorized ray crossing; map-side only, zero
-    shuffle. Returns (seg_id, tile_id); tile_id = -1 when uncontained.
-
-    When tiles_pdf carries a `venue` column (and segments a traj_id), each
-    probe tests only its own venue's tile slice — per-batch cost stays flat
-    as the corpus grows to millions of tiles (VERDICT r01 What's-wrong #1).
-    Without `venue` every ring is tested (legacy single-venue path)."""
-    venue_keyed = "venue" in tiles_pdf.columns and "traj_id" in segments.columns
-    packed = _PackedTiles(tiles_pdf, venue_keyed)
-
-    if venue_keyed:
-        @pandas_udf(T.LongType())
-        def pip_assign(venue: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-            px = x.to_numpy(np.float64)
-            py = y.to_numpy(np.float64)
-            vs = venue.to_numpy(np.int64)
-            out = np.full(len(px), -1, dtype=np.int64)
-            for v in np.unique(vs):
-                out_range = packed.venue_slice(int(v))
-                if len(out_range):
-                    packed.assign(px, py, out_range, out, vs == v)
-            return pd.Series(out)
-
-        args_front = [(F.col("traj_id") / TRAJ_VENUE_STRIDE).cast("long")]
-    else:
-        @pandas_udf(T.LongType())
-        def pip_assign(x: pd.Series, y: pd.Series) -> pd.Series:
-            px = x.to_numpy(np.float64)
-            py = y.to_numpy(np.float64)
-            out = np.full(len(px), -1, dtype=np.int64)
-            packed.assign(px, py, range(len(packed.tile_ids)), out,
-                          np.ones(len(px), dtype=bool))
-            return pd.Series(out)
-
-        args_front = []
-
-    mx = (F.col("x1") + F.col("x2")) / 2.0
-    my = (F.col("y1") + F.col("y2")) / 2.0
-    # project to the consumed columns BEFORE the fan-out (the UDF is
-    # opaque to column pruning through the exchange — guide §2.3/§4.1)
-    # and hash-partition by seg_id instead of round-robin, skipping the
-    # sortBeforeRepartition pre-sort (r7)
-    cols = ["seg_id", "x1", "y1", "x2", "y2"] + (
-        ["traj_id"] if venue_keyed else [])
-    return (_ensure_parallelism(segments.select(*cols), by=("seg_id",))
-            .select("seg_id", pip_assign(*args_front, mx, my).alias("tile_id")))
+def _tile_edges(tiles: DataFrame) -> DataFrame:
+    """Every tile ring as directed edges (tile_id, ev, ex1, ey1, ex2, ey2):
+    vertex i to vertex (i + 1) mod |ring|, so the closing edge is implied.
+    Horizontal edges are dropped: (ey1 > py) <> (ey2 > py) never holds
+    for them, and without them the crossing abscissa never divides by 0."""
+    nxt = F.col("ring")[(F.col("i") + 1) % F.size("ring")]
+    return (tiles.select(F.col("tile_id").cast("long").alias("tile_id"),
+                         F.col("venue").cast("long").alias("ev"), "ring",
+                         F.posexplode("ring").alias("i", "p"))
+            .select("tile_id", "ev",
+                    F.col("p.x").alias("ex1"), F.col("p.y").alias("ey1"),
+                    nxt["x"].alias("ex2"), nxt["y"].alias("ey2"))
+            .filter(F.col("ey1") != F.col("ey2")))
 
 
-def tile_assignments_cogrouped(segments: DataFrame, tiles: DataFrame,
-                               n_buckets: int | None = None) -> DataFrame:
-    """Venue-cogrouped point-in-polygon — the driver-free scale path
-    (VERDICT r02 What's-missing #2).
+def tile_assignments(segments: DataFrame,
+                     tiles: DataFrame | pd.DataFrame) -> DataFrame:
+    """Assign each segment's midpoint to the map tile that contains it:
+    (seg_id, tile_id), the lowest containing tile_id, -1 when none.
 
-    Segments and tile polygons are CO-PARTITIONED by a VENUE HASH BUCKET
-    (pmod(hash(venue), B)); each bucket's PIP runs inside one
-    applyInPandas task that walks its venues against exactly their own
-    rings (the same per-venue packed-array kernel the broadcast UDF uses)
-    — no driver toPandas() collect, no broadcast, no driver-side
-    structure growing with the venue count, so the operator holds at
-    10^8 venues where the broadcast path's tile collection is unbounded.
-
-    Bucketing, not raw venue, is the cogroup key deliberately: one Arrow
-    group PER VENUE drowns small venues in per-group overhead (measured
-    ~7× slower than broadcast on 2k venues × 10 segments in r4 — each
-    group paid serialization + Python dispatch for ~10 rows). Hashing
-    ~V/B venues into each of B ≈ 4×cores groups amortizes that overhead
-    to noise while keeping every venue's tiles and probes in one task.
-
-    The broadcast path remains the right plan for SMALL tile sets (the
-    BASELINE.json "broadcast of small polygon sets" mandate) — the
-    pipeline dispatches on tile count.
-
-    Same output contract as tile_assignments (midpoint test, lowest
-    tile_id wins, -1 when uncontained); equivalence test-gated.
-    tiles: DataFrame(tile_id, venue, ring: array<struct<x,y>>)."""
-    if n_buckets is None:
-        n_buckets = segments.sparkSession.sparkContext.defaultParallelism * 4
-    # hash the venue as LONG on BOTH sides: Murmur3 hashes int and long
-    # differently, and tiles read back from a venue-hive-partitioned dir
-    # carry venue as IntegerType (partition-type inference) while the
-    # segment side derives a long — unmatched types would route a venue's
-    # tiles and probes to different buckets and every assignment would be
-    # -1 (review r4, empirically confirmed; the dispatch test covers it)
-    bucket = F.pmod(F.hash(F.col("venue").cast("long")), F.lit(n_buckets))
-    segs = (segments.select(
-        "seg_id",
-        (F.col("traj_id") / TRAJ_VENUE_STRIDE).cast("long").alias("venue"),
+    tiles: a DataFrame or pandas frame with (tile_id, venue, ring
+    array<struct<x,y>>). Each midpoint is left-joined to the ring edges of
+    its own venue (traj_id div VENUE_STRIDE) under the even-odd crossing
+    predicate — the operation order of kernels.point_in_polygon and of the
+    imc_tile_assignments oracle — and one aggregate per seg_id keeps the
+    tiles crossed an odd number of times. It is one Catalyst plan: the
+    planner broadcasts a small edge table (the "broadcast of small polygon
+    sets") and shuffle-joins on venue otherwise."""
+    if isinstance(tiles, pd.DataFrame):
+        tiles = segments.sparkSession.createDataFrame(
+            tiles[["tile_id", "venue", "ring"]], _TILES_SCHEMA)
+    px, py = F.col("px"), F.col("py")
+    ex1, ey1, ex2, ey2 = (F.col(c) for c in ("ex1", "ey1", "ex2", "ey2"))
+    crosses = (((ey1 > py) != (ey2 > py))
+               & (px < ex1 + (py - ey1) / (ey2 - ey1) * (ex2 - ex1)))
+    segs = segments.select(
+        "seg_id", F.expr(f"traj_id div {TRAJ_VENUE_STRIDE}").alias("venue"),
         ((F.col("x1") + F.col("x2")) / 2.0).alias("px"),
         ((F.col("y1") + F.col("y2")) / 2.0).alias("py"))
-        .withColumn("_b", bucket))
-    tls = (tiles.select(F.col("venue").cast("long").alias("venue"),
-                        "tile_id", "ring")
-           .withColumn("_b", bucket))
-
-    def _assign(seg_pdf: pd.DataFrame, tile_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(seg_pdf):
-            return pd.DataFrame({"seg_id": pd.Series(dtype="int64"),
-                                 "tile_id": pd.Series(dtype="int64")})
-        out = np.full(len(seg_pdf), -1, dtype=np.int64)
-        if len(tile_pdf):
-            packed = _PackedTiles(tile_pdf, venue_keyed=True)
-            px = seg_pdf["px"].to_numpy(np.float64)
-            py = seg_pdf["py"].to_numpy(np.float64)
-            vs = seg_pdf["venue"].to_numpy(np.int64)
-            for v in np.unique(vs):
-                rng = packed.venue_slice(int(v))
-                if len(rng):
-                    packed.assign(px, py, rng, out, vs == v)
-        return pd.DataFrame({"seg_id": seg_pdf["seg_id"].to_numpy(np.int64),
-                             "tile_id": out})
-
-    # explicit pre-partitioning on the bucket key for BOTH cogroup
-    # sides — AQE's byte-based coalescing otherwise collapses these
-    # small shuffles onto a few tasks and starves the Python PIP kernel
-    # of cores (r7, same failure as mdl_segments); the user-specified
-    # count satisfies the clustered distribution, so no extra exchange
-    from imc.config import python_stage_partitions
-    n_shuf = python_stage_partitions(segments.sparkSession)
-    return (segs.repartition(n_shuf, "_b").groupBy("_b")
-            .cogroup(tls.repartition(n_shuf, "_b").groupBy("_b"))
-            .applyInPandas(_assign, "seg_id long, tile_id long"))
+    hits = segs.join(_tile_edges(tiles),
+                     (F.col("venue") == F.col("ev")) & crosses, "left")
+    t = F.col("t")
+    odd = F.filter(t, lambda a: F.size(F.filter(t, lambda b: b == a)) % 2 == 1)
+    return (hits.groupBy("seg_id").agg(F.collect_list("tile_id").alias("t"))
+            .select("seg_id", F.coalesce(F.array_min(odd), F.lit(-1).cast("long"))
+                    .alias("tile_id")))

@@ -151,23 +151,6 @@ def read_stage(spark: SparkSession, path: str,
     return reader.parquet(path)
 
 
-def write_bucketed_table(df: DataFrame, table: str, bucket_cols: list[str],
-                         num_buckets: int = 16,
-                         sort_cols: list[str] | None = None) -> None:
-    """Bucketed managed table — the iceberg-lite analogue of Iceberg's
-    bucket partition transform (SURVEY.md §4.2). Tables bucketed on the
-    same key with the same bucket count CO-LOCATE their rows: every
-    subsequent equi-join on that key is exchange-free (no shuffle on
-    either side — explain-plan test-gated), which is how the bookkeeping
-    joins (segments ⋈ assignments ⋈ eps_pairs on seg_id) run repeatedly
-    at corpus scale without re-shuffling the big tables each time."""
-    (df.write.mode("overwrite")
-     .bucketBy(num_buckets, *bucket_cols)
-     .sortBy(*(sort_cols or bucket_cols))
-     .format("parquet")
-     .saveAsTable(table))
-
-
 def mark_uncommitted(path: str) -> None:
     """Tombstone an existing manifest (committed=False) BEFORE destructive
     partition operations: a crash between a partition drop and the new

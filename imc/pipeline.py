@@ -6,7 +6,7 @@ pages ─filter/dedupe/extract/parse─► points
       ─venue groups + bucketed numpy DBSCAN─► assignments
       ─per-cluster sweep─► rep_points
       ─Bresenham explode + count─► raster ─► polygons
-      ─broadcast PIP─► tile_assignments
+      ─ring-edge crossing join─► tile_assignments
 
 Every stage lands as an iceberg_lite snapshot table (imc.manifest): a rerun
 with the same inputs + params skips completed stages (resume). run() makes
@@ -182,45 +182,18 @@ def run(spark: SparkSession, pages: DataFrame, out_dir: str,
                            [s_rast], partition_by=["venue"])
 
     # tiles := extracted outer polygons; tile_id = venue * 1000 + poly_id
-    # (deterministic). Small tile sets take the broadcast PIP (the
-    # BASELINE.json "broadcast of small polygon sets" mandate — rings are
-    # collected once and shipped in the UDF closure); beyond the threshold
-    # the driver leaves the path entirely: venue-cogrouped PIP, where each
-    # venue's rings meet its segments inside one applyInPandas task.
-    # dispatch on the actual broadcast payload (outer rings = tiles). The
-    # manifest row_count upper-bounds it for free (rows = outer + holes),
-    # so the common small case decides with zero extra jobs; only a
-    # row_count above the limit pays the filtered count.
-    def tile_assignments():
-        n_rows = manifest.read_manifest(
-            results["polygons"][0]).get("row_count", 0)
-        n_tiles = (n_rows if n_rows <= TILE_BROADCAST_LIMIT
-                   else _tiles_df_from_polygons(polys).count())
-        if n_tiles <= TILE_BROADCAST_LIMIT:
-            return joins.tile_assignments(segs, _tiles_from_polygons(polys))
-        return joins.tile_assignments_cogrouped(
-            segs, _tiles_df_from_polygons(polys))
-
-    stage("tile_assignments", tile_assignments, [s_seg, s_polys])
+    # (deterministic). One Catalyst plan: the planner broadcasts the ring
+    # edges when the tile set is small and shuffle-joins on venue otherwise.
+    stage("tile_assignments",
+          lambda: joins.tile_assignments(segs, _tiles_df_from_polygons(polys)),
+          [s_seg, s_polys])
     return results
-
-
-# above this many extracted polygons the tile set is no longer "small":
-# the pipeline switches from driver-collected broadcast PIP to the
-# venue-cogrouped PIP (no driver-side structure grows with venue count)
-TILE_BROADCAST_LIMIT = 20_000
 
 
 def _tiles_df_from_polygons(polys: DataFrame) -> DataFrame:
     return (polys.filter("is_outer")
             .select((F.col("venue") * 1000 + F.col("poly_id")).alias("tile_id"),
                     "venue", "ring"))
-
-
-def _tiles_from_polygons(polys: DataFrame):
-    tiles_pdf = _tiles_df_from_polygons(polys).toPandas()
-    tiles_pdf["kind"] = "corridor"
-    return tiles_pdf
 
 
 @contextmanager
@@ -526,10 +499,8 @@ def run_incremental(spark: SparkSession, new_pages: DataFrame, out_dir: str,
 
     old_ta = manifest.read_stage(spark, os.path.join(out_dir, "tile_assignments"),
                                  prev["tile_assignments"]["schema"])
-    # delta-sized tile set (affected venues only) → the broadcast PIP is
-    # the right plan here regardless of total corpus size
     new_ta = joins.tile_assignments(
-        segs_aff, _tiles_from_polygons(in_aff(polys)))
+        segs_aff, _tiles_df_from_polygons(in_aff(polys)))
     rewrite("tile_assignments",
             in_aff(old_ta, key="seg_id", anti=True)
             .unionByName(align(new_ta, old_ta)))

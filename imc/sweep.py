@@ -11,7 +11,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from imc.config import IMCParams
@@ -55,13 +54,3 @@ def representative_trajectories(segments: DataFrame, assignments: DataFrame,
             .repartition(python_stage_partitions(segments.sparkSession),
                          "cluster_id")
             .groupBy("cluster_id").applyInPandas(_sweep, REP_SCHEMA))
-
-
-def rep_polylines(rep_points: DataFrame) -> DataFrame:
-    """Compact ARRAY<STRUCT<x,y>> form per cluster (SURVEY.md §1.2 A5)."""
-    return (rep_points
-            .groupBy("cluster_id")
-            .agg(F.sort_array(F.collect_list(F.struct("pt_seq", "x", "y"))).alias("_pts"))
-            .select("cluster_id",
-                    F.transform("_pts", lambda p: F.struct(p.x.alias("x"), p.y.alias("y"))
-                                ).alias("polyline")))

@@ -21,11 +21,8 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from imc import graph
 
@@ -598,12 +595,6 @@ def pack_sequences(documents: DataFrame, ctx_len: int = 2048) -> DataFrame:
                     start.cast("long").alias("start_offset"),
                     first.cast("long").alias("first_chunk"),
                     last.cast("long").alias("last_chunk")))
-
-
-def _bigrams(col):
-    """Word-2-gram list WITH duplicates (frequency analysis needs
-    multiplicity — unlike _shingles' distinct set for Jaccard)."""
-    return _ngrams(col, 2)
 
 
 def repetition_scores(documents: DataFrame) -> DataFrame:

@@ -19,6 +19,29 @@ def test_entry_smoke(spark):
     assert set(df.columns) == {"a_seg", "b_seg", "dist", "a_tile", "b_tile"}
 
 
+def test_fixture_cache_names_track_engine_sources(tmp_path, monkeypatch):
+    """The cached segments/assignments fixtures are keyed by the imc/*.py
+    sources too: one changed source byte must change both cache names, so
+    the oracles never compare against output written by older code."""
+    real = (entrymod._seg_cache_name(), entrymod._assign_cache_name())
+    src = tmp_path / "imc"
+    src.mkdir()
+    for name in os.listdir(entrymod._IMC_DIR):
+        if name.endswith(".py"):
+            with open(os.path.join(entrymod._IMC_DIR, name), "rb") as f:
+                (src / name).write_bytes(f.read())
+    monkeypatch.setattr(entrymod, "_IMC_DIR", str(src))
+    before = (entrymod._seg_cache_name(), entrymod._assign_cache_name())
+    assert before == real  # the bytes decide, not the directory
+    joins = src / "joins.py"
+    data = bytearray(joins.read_bytes())
+    data[-1] ^= 1
+    joins.write_bytes(bytes(data))
+    after = (entrymod._seg_cache_name(), entrymod._assign_cache_name())
+    assert before[0] != after[0] and before[1] != after[1]
+    assert all(entrymod.PARAMS.params_hash() in n for n in before + after)
+
+
 def test_queries_outside_driver_snapshot_are_pinned():
     """The queries past the driver's snapshot window get no driver
     correctness row; a reorder that changes which ones must show here."""

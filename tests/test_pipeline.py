@@ -8,9 +8,9 @@ from contextlib import contextmanager
 import pytest
 from pyspark.sql.types import LongType, StructField, StructType
 
-from fixtures import gen_pages
+from fixtures import gen_pages, oracle
 from imc import manifest, pipeline
-from imc.config import IMCParams
+from imc.config import VENUE_STRIDE, IMCParams
 
 PARAMS = IMCParams(eps=1.2, min_lns=3)
 
@@ -102,6 +102,17 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path, monkeypatch):
             for f in written.schema.fields])
         assert StructType.fromJson(m["schema"]) == inferred, name
 
+    # the committed tile assignments equal the scalar PIP oracle over this
+    # run's own outer polygons (tile_id = venue * 1000 + poly_id)
+    polys = spark.read.parquet(results["polygons"][0]).toPandas()
+    tiles = polys[polys["is_outer"]].assign(
+        tile_id=lambda d: d["venue"] * 1000 + d["poly_id"])
+    segs = spark.read.parquet(results["segments"][0]).toPandas()
+    got = spark.read.parquet(results["tile_assignments"][0]).toPandas()
+    assert len(got) == len(segs)
+    assert dict(zip(got["seg_id"], got["tile_id"])) == \
+        oracle.tile_assignments_oracle(segs, tiles, VENUE_STRIDE)
+
     # resume: second run with identical inputs+params must skip (manifests
     # unchanged on disk — compare mtimes) without building any stage or
     # starting any Spark job (stages are read back with their recorded
@@ -154,42 +165,6 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path, monkeypatch):
     results5 = pipeline.run(spark, hot_pages, out, PARAMS)
     assert results5["points"][1] != results["points"][1]
     assert results5["eps_pairs"][1] != results["eps_pairs"][1]
-
-
-@pytest.mark.usefixtures("spark")
-def test_pipeline_dispatches_cogrouped_pip_above_limit(spark, tmp_path,
-                                                       monkeypatch):
-    """VERDICT r03 #2 (wiring half): above TILE_BROADCAST_LIMIT the
-    pipeline must provably take the venue-cogrouped PIP — and its
-    tile_assignments output must equal the broadcast path's."""
-    from imc import joins
-    path = gen_pages.ensure_pages(sf=0.01)
-    pages = spark.read.parquet(path)
-
-    called = {"n": 0}
-    real = joins.tile_assignments_cogrouped
-
-    def _spy(*a, **k):
-        called["n"] += 1
-        return real(*a, **k)
-
-    monkeypatch.setattr(joins, "tile_assignments_cogrouped", _spy)
-    monkeypatch.setattr(pipeline, "TILE_BROADCAST_LIMIT", 3)
-    out_cg = pipeline.run(spark, pages, str(tmp_path / "cg"), PARAMS)
-    assert called["n"] == 1
-
-    monkeypatch.setattr(pipeline, "TILE_BROADCAST_LIMIT", 20_000)
-    out_bc = pipeline.run(spark, pages, str(tmp_path / "bc"), PARAMS)
-    assert called["n"] == 1  # broadcast path this time
-
-    got = _read_tile(spark, out_cg["tile_assignments"][0])
-    want = _read_tile(spark, out_bc["tile_assignments"][0])
-    assert got.equals(want) and len(got) > 0
-
-
-def _read_tile(spark, path):
-    df = spark.read.parquet(path).toPandas()
-    return df.sort_values("seg_id").reset_index(drop=True)
 
 
 @pytest.mark.usefixtures("spark")
