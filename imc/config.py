@@ -55,23 +55,3 @@ class IMCParams:
 
 DEFAULT_PARAMS = IMCParams()
 
-
-def python_stage_partitions(spark) -> int:
-    """Explicit partition count for shuffles feeding a PYTHON-KERNEL
-    stage (mapInPandas / applyInPandas over numpy kernels).
-
-    AQE's partition coalescing sizes post-shuffle partitions by BYTES
-    (advisoryPartitionSizeInBytes) and cannot see that the downstream
-    stage's cost is Python CPU per row: the r7 profile showed the MDL
-    walk's 13 s of kernel CPU coalesced onto 5 tasks because the point
-    shuffle is only ~10 MB. A USER-SPECIFIED repartition count is exempt
-    from AQE coalescing, so these stages pin one: the session's
-    configured shuffle parallelism floored at 2× defaultParallelism —
-    both session knobs, nothing hard-coded to this box, and at cluster
-    scale the operator simply inherits the cluster's shuffle tuning."""
-    try:
-        conf_n = int(str(spark.conf.get("spark.sql.shuffle.partitions",
-                                        "200")))
-    except (TypeError, ValueError):  # e.g. "auto" on some builds
-        conf_n = 200
-    return max(conf_n, spark.sparkContext.defaultParallelism * 2)

@@ -28,6 +28,7 @@ from pyspark.sql import types as T
 
 from imc.config import IMCParams
 from imc.kernels import offset_polyline, sweep_representative
+from imc.partitioning import python_stage_partitions
 
 CORRIDOR_SCHEMA = T.StructType([
     T.StructField("cluster_id", T.LongType()),
@@ -66,11 +67,8 @@ def corridor_polygons(segments: DataFrame, assignments: DataFrame,
             "ring": [[{"x": float(x), "y": float(y)} for x, y in ring]],
         })
 
-    from imc.config import python_stage_partitions
     joined = (assignments.select("seg_id", "cluster_id")
               .join(segments.select("seg_id", "x1", "y1", "x2", "y2"), "seg_id"))
-    # explicit pre-partitioning on the group key — see sweep.py (AQE
-    # byte-coalescing starves the Python kernel stage of cores)
     return (joined
             .repartition(python_stage_partitions(segments.sparkSession),
                          "cluster_id")

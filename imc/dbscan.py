@@ -31,7 +31,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from imc import graph, kernels
-from imc.config import VENUE_STRIDE, IMCParams, python_stage_partitions
+from imc.config import VENUE_STRIDE, IMCParams
+from imc.partitioning import python_stage_partitions
 from imc.segments import SEG_ID_STRIDE
 
 _COMP_SCHEMA = "seg_id long, comp long, is_core boolean"

@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 from imc import rasterops
 from imc.config import VENUE_STRIDE, IMCParams
 from imc.kernels import grid_traverse_batch
+from imc.partitioning import fan_out, python_stage_partitions
 
 TRAJ_VENUE_STRIDE = VENUE_STRIDE  # single source: imc.config
 
@@ -55,12 +56,9 @@ def rasterize(segments: DataFrame, params: IMCParams | None = None) -> DataFrame
                                 "gx": gx.astype(np.int32),
                                 "gy": gy.astype(np.int32)})
 
-    from imc.joins import _ensure_parallelism
-    # project first (mapInPandas is opaque to pruning through the
-    # exchange), hash-partition by traj_id — no round-robin pre-sort
-    segments = _ensure_parallelism(
-        segments.select("traj_id", "x1", "y1", "x2", "y2"),
-        by=("traj_id",))
+    # project first: mapInPandas is opaque to pruning through the exchange
+    segments = fan_out(segments.select("traj_id", "x1", "y1", "x2", "y2"),
+                       "traj_id")
     return (segments
             .mapInPandas(cells, _CELL_ROWS_SCHEMA)
             .groupBy("venue", "gx", "gy")
@@ -100,10 +98,7 @@ def extract_polygons(raster: DataFrame, params: IMCParams | None = None) -> Data
             })
         return pd.DataFrame(rows, columns=["venue", "poly_id", "is_outer", "ring"])
 
-    from imc.config import python_stage_partitions
-    # explicit pre-partitioning on the group key — see sweep.py (AQE
-    # byte-coalescing starves the Python kernel stage of cores); venue
-    # count bounds the useful parallelism, repartition only spreads it
+    # venue count bounds the useful parallelism; repartition only spreads it
     return (raster
             .repartition(python_stage_partitions(raster.sparkSession),
                          "venue")

@@ -14,29 +14,28 @@ from __future__ import annotations
 
 import numpy as np
 
-from imc.kernels import point_in_polygon
+from imc import kernels
 
 
 def label_components(mask: np.ndarray) -> np.ndarray:
     """4-connected component labels (0 = empty, 1..k in deterministic scan
-    order). mask: (nx, ny) bool array indexed [ix, iy]."""
+    order). mask: (nx, ny) bool array indexed [ix, iy].
+
+    Nodes are the filled cells in (ix, iy) scan order, edges join filled
+    4-neighbours; a component's label is the dense rank of its minimum
+    node + 1, i.e. components are numbered by their first cell in scan
+    order."""
     nx, ny = mask.shape
+    filled = np.flatnonzero(mask)
+    node = np.full((nx, ny), -1, dtype=np.int64)
+    node.flat[filled] = np.arange(filled.size)
+    step_x = mask[:-1, :] & mask[1:, :]
+    step_y = mask[:, :-1] & mask[:, 1:]
+    a = np.concatenate([node[:-1, :][step_x], node[:, :-1][step_y]])
+    b = np.concatenate([node[1:, :][step_x], node[:, 1:][step_y]])
+    root, _ = kernels.label_components(filled.size, a, b)
     labels = np.zeros((nx, ny), dtype=np.int32)
-    nxt = 0
-    for ix in range(nx):
-        for iy in range(ny):
-            if mask[ix, iy] and labels[ix, iy] == 0:
-                nxt += 1
-                stack = [(ix, iy)]
-                labels[ix, iy] = nxt
-                while stack:
-                    cx, cy = stack.pop()
-                    for dx, dy in ((1, 0), (-1, 0), (0, 1), (0, -1)):
-                        px, py = cx + dx, cy + dy
-                        if 0 <= px < nx and 0 <= py < ny and mask[px, py] \
-                                and labels[px, py] == 0:
-                            labels[px, py] = nxt
-                            stack.append((px, py))
+    labels.flat[filled] = np.unique(root, return_inverse=True)[1] + 1
     return labels
 
 
@@ -133,7 +132,7 @@ def fill_rings(rings, shape) -> np.ndarray:
     py = gy.ravel()
     inside = np.zeros(px.shape[0], dtype=np.int64)
     for ring, _lab, _outer in rings:
-        inside += point_in_polygon(px, py, ring).astype(np.int64)
+        inside += kernels.point_in_polygon(px, py, ring).astype(np.int64)
     return (inside % 2 == 1).reshape(nx, ny)
 
 

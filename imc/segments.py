@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from imc.kernels import mdl_partition
+from imc.partitioning import python_stage_partitions
 
 SEG_ID_STRIDE = 100_000
 
@@ -144,15 +145,8 @@ def mdl_segments(points: DataFrame) -> DataFrame:
             if f is not None:
                 yield f
 
-    from imc.config import python_stage_partitions
     df = (points
           .select("traj_id", "seq", "x", "y")
-          # EXPLICIT partition count: the MDL walk is Python-CPU-bound,
-          # and AQE's byte-based coalescing collapsed this ~10 MB
-          # shuffle to a handful of tasks — serializing ~13 s of kernel
-          # CPU onto 5 cores (r7 profile). A user-specified count is
-          # exempt from coalescing; the value is session-derived
-          # (python_stage_partitions), not a box constant.
           .repartition(python_stage_partitions(points.sparkSession),
                        "traj_id")
           .sortWithinPartitions("traj_id", "seq")

@@ -10,6 +10,11 @@ as the spatial ε-join (SURVEY.md §2.4).
 Dot products are accumulated in float64 in ascending dimension order and
 scores rounded to 6 decimals so the DuckDB oracle (explicit unnest-sum SQL
 in __spark_entry__) reproduces values bitwise.
+
+The per-row scoring stages (higher-order-function cosines × n_lists, LSH
+projections, PQ codes) go through partitioning.fan_out keyed by vec_id: a
+small embeddings parquet packs into one scan split and would run them on
+one core.
 """
 
 from __future__ import annotations
@@ -21,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from imc import graph
+from imc.partitioning import fan_out
 
 def _cos_expr(x, y):
     """Exact cosine as JVM array expressions, fixed dimension order, with
@@ -33,18 +39,6 @@ def _cos_expr(x, y):
     ny = F.sqrt(F.aggregate(F.transform(y, lambda p: p.cast("double") * p.cast("double")),
                             F.lit(0.0), lambda acc, v: acc + v))
     return dot / F.greatest(nx * ny, F.lit(1e-300))
-
-
-def _fan_out_emb(embeddings: DataFrame) -> DataFrame:
-    """Ensure the scan feeding a per-row-scoring MAP stage has enough
-    splits (the textops._fan_out twin for the embeddings table): a
-    small embeddings parquet packs into one scan split, serializing the
-    per-row centroid/codebook scoring — higher-order-function cosines ×
-    n_lists per row — onto ONE core (r7 profile: the (0+1)/1 stage in
-    every ANN job at bench scale). Hash-partitioned by vec_id; a
-    many-file corpus is untouched (split-estimate no-op)."""
-    from imc.joins import _ensure_parallelism
-    return _ensure_parallelism(embeddings, by=("vec_id",))
 
 
 _TOPK_SCHEMA = T.StructType([
@@ -112,10 +106,10 @@ def ann_topk_bruteforce(embeddings: DataFrame, k: int = 5,
             if rows:
                 yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "score"])
 
-    # deliberately NOT fanned out (_fan_out_emb): the per-batch work is
-    # one vectorized numpy matmul — fast on few cores — and every extra
-    # partition emits its own k+8 partial rows per probe into the final
-    # window (measured: fanning out tripled this query's time)
+    # deliberately NOT fanned out (partitioning.fan_out): the per-batch
+    # work is one vectorized numpy matmul — fast on few cores — and every
+    # extra partition emits its own k+8 partial rows per probe into the
+    # final window (measured: fanning out tripled this query's time)
     partial = embeddings.select("vec_id", "embedding") \
         .mapInPandas(scan, _TOPK_SCHEMA)
     # rank on the ROUNDED score with a neighbor_id tie-break: selection is
@@ -206,7 +200,7 @@ def _with_multi_bucket(embeddings: DataFrame, bits: int,
         key = " + ".join(bit_terms)
         structs.append(f"named_struct('tbl', {t}, 'bucket', ({key}))")
     gen = f"explode(array({', '.join(structs)}))"
-    return (_fan_out_emb(embeddings)
+    return (fan_out(embeddings, "vec_id")
             .withColumn("_tb", F.expr(gen))
             .withColumn("tbl", F.col("_tb.tbl"))
             .withColumn("bucket", F.col("_tb.bucket"))
@@ -601,7 +595,7 @@ def ann_topk_ivf(embeddings: DataFrame, k: int = 5, probe_mod: int = 50,
     # through a collapsed project (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND,
     # reproduced r7).
     scored = _scored_lists_expr(centroids)
-    fanned = _fan_out_emb(embeddings)
+    fanned = fan_out(embeddings, "vec_id")
     lists = fanned.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("b_emb"),
@@ -844,7 +838,8 @@ def ann_topk_pq(embeddings: DataFrame, k: int = 5, probe_mod: int = 50,
     # single SELECT per side, not m chained withColumns (each is a Py4J
     # round-trip plus a plan level to analyze)
     nb = _norm_expr(F.col("embedding"))
-    base = (_fan_out_emb(embeddings).select("vec_id", nb.alias("_nb"))
+    base = (fan_out(embeddings, "vec_id")
+            .select("vec_id", nb.alias("_nb"))
             .select("vec_id",
                     *[F.expr(_code_sql(j)).alias(f"_code_{j}")
                       for j in range(m)]))
@@ -946,7 +941,7 @@ def ann_topk_lsh(embeddings: DataFrame, k: int = 5,
     # attached it with a vec_id self-join (2 extra exchanges); the score
     # is computed in the join's map stage so the window exchange carries
     # (ids, score) only (r7, same discipline as ann_topk_lsh_multi)
-    with_b = _fan_out_emb(embeddings).select(
+    with_b = fan_out(embeddings, "vec_id").select(
         "vec_id", "embedding", _sign_bucket_expr(bits).alias("bucket"))
     a = (with_b.filter(F.col("vec_id") % probe_mod == 0)
          .select(F.col("vec_id").alias("query_id"),

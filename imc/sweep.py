@@ -15,6 +15,7 @@ from pyspark.sql import types as T
 
 from imc.config import IMCParams
 from imc.kernels import sweep_representative
+from imc.partitioning import python_stage_partitions
 
 REP_SCHEMA = T.StructType([
     T.StructField("cluster_id", T.LongType()),
@@ -42,14 +43,10 @@ def representative_trajectories(segments: DataFrame, assignments: DataFrame,
             "y": rep[:, 1],
         })
 
-    from imc.config import python_stage_partitions
     joined = (assignments.select("seg_id", "cluster_id")
               .join(segments.select("seg_id", "x1", "y1", "x2", "y2"), "seg_id"))
-    # explicit pre-partitioning on the group key: applyInPandas' own
-    # exchange is AQE-coalesced by BYTES, which starves the Python sweep
-    # kernel of cores (r7: same failure as mdl_segments); a
-    # user-specified repartition satisfies the grouping distribution, so
-    # no second exchange is added
+    # the repartition satisfies the grouping distribution, so
+    # applyInPandas adds no second exchange
     return (joined
             .repartition(python_stage_partitions(segments.sparkSession),
                          "cluster_id")

@@ -14,6 +14,11 @@ Dedup strategy ladder (exact → near):
   lsh_dup_pairs      band buckets (4 bands × 2 rows) → in-bucket pairs
   ngram_jaccard      exact word-3-gram Jaccard on LSH candidates
   simhash            64-bit sign-aggregated token-hash fingerprint
+
+Only the md5-per-shingle/token map stages go through partitioning.fan_out
+(keyed by the unique doc_id): a small corpus packs into one scan split and
+serializes that hashing onto one core, while for light map stages the
+extra exchange costs more than it recovers (measured both ways).
 """
 
 from __future__ import annotations
@@ -25,6 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from imc import graph
+from imc.partitioning import fan_out
 
 MINHASH_K = 8
 LSH_BANDS = 4  # 2 signature rows per band
@@ -164,24 +170,6 @@ def _with_words(documents: DataFrame, out: str = "_w") -> DataFrame:
     return documents.withColumn(out, _words(F.col("text")))
 
 
-def _fan_out(documents: DataFrame) -> DataFrame:
-    """Ensure the scan feeding a token/shingle-heavy MAP stage has
-    enough splits. A small corpus parquet packs into a handful of scan
-    splits (bytes-based packing), which serialized the whole
-    explode+hash map side of the dedup family onto ONE core at bench
-    scale (r7 profile: the single-task stage preceding every
-    fingerprint/minhash aggregate). Reuses the joins._ensure_parallelism
-    split-estimate logic — a big corpus with many files is left
-    untouched, so this is latency-only at small scale and a no-op at
-    100 TB. Hash-partitioned by doc_id (unique ⇒ even), not
-    round-robin, to skip the sortBeforeRepartition pre-sort of the text
-    payload. Applied ONLY where the per-row map work is hash-heavy
-    (md5-per-shingle/token); for light map stages the exchange costs
-    more than it recovers (measured both ways, r7)."""
-    from imc.joins import _ensure_parallelism
-    return _ensure_parallelism(documents, by=("doc_id",))
-
-
 def _ngrams(col, n: int):
     """Word-n-gram list WITH duplicates, as expressions, for PER-ROW
     array consumers. Per-element cost is O(words) because the split
@@ -214,7 +202,7 @@ def minhash_signatures(documents: DataFrame, k: int = MINHASH_K) -> DataFrame:
     before the shuffle) — higher-order array functions are interpreted
     per-element in Catalyst and were ~10× slower here."""
     assert k <= 8
-    sh = (_with_words(_fan_out(documents))
+    sh = (_with_words(fan_out(documents, "doc_id"))
           .filter(F.size(F.col("_w")) >= 3)
           .select("doc_id",
                   F.explode(_shingles_of_words(F.col("_w"))).alias("s")))
@@ -337,7 +325,8 @@ def simhash_fingerprints(documents: DataFrame) -> DataFrame:
     shuffle) → sign-pack. Bit b of a token's hash = bit (b%4) of hex digit
     15−b//4 of the md5 (first 8 bytes, big-endian) — matching simhash64_py
     and the DuckDB oracle exactly. Tokenless docs get simhash 0."""
-    toks = _fan_out(documents).select("doc_id", _terms_expr().alias("tok"))
+    toks = fan_out(documents, "doc_id").select(
+        "doc_id", _terms_expr().alias("tok"))
     hx = text_hash_expr(F.col("tok"))
     # r7: TWO 8-hex-digit convs per token instead of sixteen 1-digit
     # ones — `_hi` holds hex digits 0..7 (bits 32..63 of the big-endian
@@ -492,7 +481,7 @@ def decontaminate(documents: DataFrame, benchmark: DataFrame,
                             .alias("sh"))
                     .select(F.unhex(text_hash_expr("sh")).alias("h"))
                     .distinct())
-    doc_sh = (_with_words(_fan_out(documents))
+    doc_sh = (_with_words(fan_out(documents, "doc_id"))
               .select("doc_id",
                       F.explode(_shingles_of_words(F.col("_w"))).alias("sh"))
               .select("doc_id",
@@ -805,7 +794,7 @@ def substring_dup_spans(documents: DataFrame, k: int = 8,
     bench row's sf0.1 cost (~2x the single-pass time) is that choice
     priced honestly. substring_scrub makes the same call."""
     salt_mod = max(1, int(salt_mod))
-    sh = (_with_words(_fan_out(documents))
+    sh = (_with_words(fan_out(documents, "doc_id"))
           .select("doc_id",
                   F.posexplode(_ngrams_of_words(F.col("_w"), k))
                   .alias("pos0", "s"))
@@ -870,7 +859,7 @@ def substring_scrub(documents: DataFrame, k: int = 8,
     (composite-unique keys, no skew surface) and one doc-bounded
     collect/sort/join aggregate."""
     salt_mod = max(1, int(salt_mod))
-    sh = (_with_words(_fan_out(documents))
+    sh = (_with_words(fan_out(documents, "doc_id"))
           .select("doc_id",
                   F.posexplode(_ngrams_of_words(F.col("_w"), k))
                   .alias("pos0", "s"))

@@ -1,6 +1,8 @@
 """CI guard (SURVEY.md §7.3-4): the input_hint mandates vectorized
-pandas/Arrow UDFs only — no per-row Python `udf()` anywhere in the package."""
+pandas/Arrow UDFs only — no per-row Python `udf()` anywhere in the package;
+and the stage-partitioning policy is read in one module."""
 
+import ast
 import os
 import re
 
@@ -27,3 +29,45 @@ def test_no_row_udf_in_package():
                 line = src[start:src.find("\n", m.start())]
                 bad.append((path, line.strip()))
     assert not bad, bad
+
+
+def _reads(tree):
+    """(enclosing function or None, read) for every defaultParallelism
+    attribute and spark.sql.shuffle.partitions literal in a module."""
+    out = []
+
+    def visit(node, func):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        if isinstance(node, ast.Attribute) \
+                and node.attr == "defaultParallelism":
+            out.append((func, "defaultParallelism"))
+        if isinstance(node, ast.Constant) \
+                and node.value == "spark.sql.shuffle.partitions":
+            out.append((func, "spark.sql.shuffle.partitions"))
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(tree, None)
+    return out
+
+
+def test_partition_counts_read_in_one_module():
+    """Stage partition counts are decided in imc/partitioning.py only.
+    manifest.write_venue_stats also reads defaultParallelism: it caps the
+    number of FILES the venue-stats side table is written as, an output
+    layout decision, not how many tasks a stage runs."""
+    allowed = {("partitioning.py", "python_stage_partitions",
+                "spark.sql.shuffle.partitions"),
+               ("partitioning.py", "python_stage_partitions",
+                "defaultParallelism"),
+               ("partitioning.py", "fan_out", "defaultParallelism"),
+               ("manifest.py", "write_venue_stats", "defaultParallelism")}
+    found = set()
+    for root, _dirs, files in os.walk(PKG):
+        for fn in files:
+            if fn.endswith(".py"):
+                with open(os.path.join(root, fn)) as f:
+                    tree = ast.parse(f.read())
+                found |= {(fn, func, what) for func, what in _reads(tree)}
+    assert found == allowed, found ^ allowed

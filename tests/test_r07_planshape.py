@@ -24,8 +24,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from imc import joins, segments, similarity
-from imc.config import IMCParams, python_stage_partitions
+from imc import corridors, dbscan, joins, raster, segments, similarity, sweep
+from imc.config import IMCParams
+from imc.partitioning import python_stage_partitions
 
 
 @pytest.fixture(scope="module")
@@ -120,15 +121,85 @@ def test_eps_join_barrier_value_is_identity(spark):
     assert (m["dist"] <= params.eps).all()
 
 
-def test_python_kernel_stages_pin_partition_count(spark):
+def _stage_inputs(spark):
+    segs = spark.createDataFrame(pd.DataFrame({
+        "seg_id": np.arange(6, dtype=np.int64),
+        "traj_id": np.array([1, 1, 1, 2, 2, 2], dtype=np.int64),
+        "x1": [0.0, 1, 2, 0, 1, 2], "y1": [0.0, 0, 0, 0.5, 0.5, 0.5],
+        "x2": [1.0, 2, 3, 1, 2, 3], "y2": [0.0, 0, 0, 0.5, 0.5, 0.5]}))
+    assign = spark.createDataFrame(pd.DataFrame({
+        "seg_id": np.arange(6, dtype=np.int64),
+        "cluster_id": np.zeros(6, dtype=np.int64)}))
+    return segs, assign
+
+
+def _plan_counts(df, key):
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return re.findall(rf"RepartitionByExpression \[{key}#\d+L?\], (\d+)",
+                      plan)
+
+
+def _mdl(spark):
     pts = spark.createDataFrame(
         pd.DataFrame({"traj_id": [1] * 5, "seq": range(5),
                       "x": [0.0, 1, 2, 3, 4], "y": [0.0] * 5}))
-    plan = segments.mdl_segments(pts)._jdf.queryExecution() \
-        .optimizedPlan().toString()
-    want = python_stage_partitions(spark)
-    assert f"RepartitionByExpression [traj_id" in plan, plan[:1500]
-    assert str(want) in plan, (want, plan[:1500])
+    return _plan_counts(segments.mdl_segments(pts), "traj_id")
+
+
+def _sweep(spark):
+    segs, assign = _stage_inputs(spark)
+    return _plan_counts(sweep.representative_trajectories(segs, assign),
+                        "cluster_id")
+
+
+def _corridors(spark):
+    segs, assign = _stage_inputs(spark)
+    return _plan_counts(corridors.corridor_polygons(segs, assign),
+                        "cluster_id")
+
+
+def _extract(spark):
+    rast = spark.createDataFrame(pd.DataFrame({
+        "venue": np.array([0, 0, 1], dtype=np.int64),
+        "gx": np.array([0, 1, 0], dtype=np.int32),
+        "gy": np.array([0, 0, 0], dtype=np.int32),
+        "hits": np.array([3, 3, 3], dtype=np.int64)}))
+    return _plan_counts(raster.extract_polygons(rast), "venue")
+
+
+def _dbscan(spark):
+    # the kernel stage sits below dbscan's localCheckpoint, so its count
+    # is the partition count of the checkpointed leaves
+    segs, _ = _stage_inputs(spark)
+    pairs = spark.createDataFrame(pd.DataFrame({
+        "a_seg": np.array([0, 1, 3], dtype=np.int64),
+        "b_seg": np.array([1, 2, 4], dtype=np.int64)}))
+    out = dbscan.dbscan(segs, pairs, IMCParams(min_lns=1))
+    leaves = out._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return [str(leaves.apply(i).rdd().getNumPartitions())
+            for i in range(leaves.size())]
+
+
+def _rasterize(spark):
+    segs, _ = _stage_inputs(spark)
+    return _plan_counts(raster.rasterize(segs), "traj_id")
+
+
+@pytest.mark.parametrize("build,want", [
+    (_mdl, python_stage_partitions),
+    (_sweep, python_stage_partitions),
+    (_corridors, python_stage_partitions),
+    (_extract, python_stage_partitions),
+    (_dbscan, python_stage_partitions),
+    (_rasterize, lambda s: 2 * s.sparkContext.defaultParallelism),
+], ids=["mdl_segments", "representative_trajectories", "corridor_polygons",
+        "extract_polygons", "dbscan", "rasterize"])
+def test_python_kernel_stages_pin_partition_count(spark, build, want):
+    """Every shuffle feeding a Python-kernel stage carries the policy's
+    explicit count (AQE's byte-based coalescing would starve it), and
+    rasterize's scan fan-out carries fan_out's."""
+    counts = build(spark)
+    assert counts and set(counts) == {str(want(spark))}, counts
 
 
 def test_bruteforce_probe_cap_raises_loudly(emb):

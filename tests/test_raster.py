@@ -51,6 +51,41 @@ def test_label_components():
     assert len({lab[0, 0], lab[0, 2], lab[2, 2]}) == 3
 
 
+def _flood_fill_labels(mask):
+    """Reference: per-cell stack flood fill, components numbered 1..k in
+    the scan order of their first cell."""
+    nx, ny = mask.shape
+    labels = np.zeros((nx, ny), dtype=np.int32)
+    nxt = 0
+    for ix in range(nx):
+        for iy in range(ny):
+            if mask[ix, iy] and labels[ix, iy] == 0:
+                nxt += 1
+                stack = [(ix, iy)]
+                labels[ix, iy] = nxt
+                while stack:
+                    cx, cy = stack.pop()
+                    for dx, dy in ((1, 0), (-1, 0), (0, 1), (0, -1)):
+                        px, py = cx + dx, cy + dy
+                        if 0 <= px < nx and 0 <= py < ny and mask[px, py] \
+                                and labels[px, py] == 0:
+                            labels[px, py] = nxt
+                            stack.append((px, py))
+    return labels
+
+
+def test_label_components_matches_flood_fill():
+    rng = np.random.default_rng(11)
+    masks = [np.zeros((3, 4), dtype=bool), np.ones((5, 1), dtype=bool)]
+    for _ in range(60):
+        nx, ny = rng.integers(1, 40, size=2)
+        masks.append(rng.random((nx, ny)) < rng.uniform(0.2, 0.8))
+    for mask in masks:
+        got = rasterops.label_components(mask)
+        assert got.dtype == np.int32
+        np.testing.assert_array_equal(got, _flood_fill_labels(mask))
+
+
 @pytest.mark.usefixtures("spark")
 def test_rasterize_and_polygons_on_fixture(spark):
     path = gen_pages.ensure_pages(sf=0.001)
