@@ -19,8 +19,9 @@ Layout (SURVEY.md §7.8):
                PIP tile assignment (venue-keyed join to ring edges)
   dbscan.py    segment DBSCAN: venue groups (graph.py) + one venue-bucketed
                numpy pass
-  graph.py     the distributed connected-components engine (DBSCAN venue
-               groups, near-dup clusters)
+  graph.py     connected components (DBSCAN venue groups, near-dup
+               clusters): numpy on the driver, contraction rounds above
+               LOCAL_EDGES edges
   sweep.py     representative-trajectory sweep per cluster
   corridors.py corridor polygons: miter-offset buffer of rep polylines
   quality.py   TRACLUS QMeasure clustering-quality metric ([T] §6.2)

@@ -968,9 +968,9 @@ def embedding_dup_clusters(embeddings: DataFrame, threshold: float = 0.9,
     textops.dedup_clusters: connected components over the embedding-
     cosine near-duplicate pair graph (embedding_dup_pairs: multi-table
     sign-LSH candidates, exact-cosine refine), labelled by
-    imc.graph.connected_components. Completes the dedup ladder at its
-    operational end for the embedding modality too — purge list = NOT
-    is_keeper, canonical representative = the component-min vec_id."""
+    imc.graph.connected_components (on the driver up to LOCAL_EDGES pairs,
+    by contraction rounds above). The dedup ladder's operational end for
+    embeddings: purge list = NOT is_keeper, canonical = component-min."""
     pairs = embedding_dup_pairs(embeddings, threshold, bits, tables)
     comp = graph.connected_components(
         embeddings.select(F.col("vec_id").alias("id")).distinct(),

@@ -2,7 +2,7 @@
 of the engine (deduplication, language ID, quality scoring, token counting,
 fingerprinting) over `documents(doc_id, text, lang, source, n_chars)`.
 
-Everything here — simhash included since r2 — is pure Catalyst
+Everything here — simhash included — is pure Catalyst
 expressions (JVM-side, whole-stage codegen). Each operator
 has an exactly-matching ANSI-SQL twin in __spark_entry__.oracle_sql() —
 the arithmetic is written to be bit-reproducible across Spark and DuckDB
@@ -70,7 +70,7 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
 def _tokens_expr():
     """Whitespace token count over `text` — the ONE token definition
     (token_counts, quality_scores, corpus_stats and their oracles all
-    share it; review r4: hand-kept copies of bit-sensitive expressions
+    share it: hand-kept copies of bit-sensitive expressions
     desynchronize silently)."""
     return F.size(F.regexp_extract_all(F.col("text"), F.lit(r"\S+"), 0))
 
@@ -78,8 +78,8 @@ def _tokens_expr():
 def _terms_expr():
     """Exploded LOWERCASED whitespace tokens of `text` — the one term
     definition simhash_fingerprints and top_terms (and their DuckDB
-    oracles) share; the case-folded sibling of _tokens_expr (review r5:
-    a second verbatim copy of this explode had already appeared)."""
+    oracles) share; the case-folded sibling of _tokens_expr, so no
+    second verbatim copy of this explode appears."""
     return F.explode(
         F.regexp_extract_all(F.lower(F.col("text")), F.lit(r"\S+"), 0))
 
@@ -144,9 +144,9 @@ def _ngrams_of_words(words, n: int):
     `words` must be a bound column reference (not the _words(...)
     expression tree): the n-gram transform references the array once per
     element, and an inlined split(trim(lower(text))) re-tokenizes the
-    whole document PER SHINGLE POSITION — O(words²) per doc (the r7
-    profiling find: the split appeared verbatim inside the Generate
-    lambda in every shingle consumer's plan). Callers project the words
+    whole document PER SHINGLE POSITION — O(words²) per doc (profiled:
+    the split appeared verbatim inside the Generate lambda in every
+    shingle consumer's plan). Callers project the words
     array into a column first (_with_words) so the split runs once per
     row.
 
@@ -170,25 +170,10 @@ def _with_words(documents: DataFrame, out: str = "_w") -> DataFrame:
     return documents.withColumn(out, _words(F.col("text")))
 
 
-def _ngrams(col, n: int):
-    """Word-n-gram list WITH duplicates, as expressions, for PER-ROW
-    array consumers. Per-element cost is O(words) because the split
-    inlines into the lambda — explode-heavy paths must use
-    _with_words + _ngrams_of_words instead (O(words) once per row)."""
-    return _ngrams_of_words(_words(col), n)
-
-
 def _shingles_of_words(words):
     """Word-3-gram shingle array from a materialized words column,
     distinct (Jaccard set semantics)."""
     return F.array_distinct(_ngrams_of_words(words, 3))
-
-
-def _shingles(col):
-    """Word-3-gram shingle array, distinct (Jaccard set semantics).
-    Per-row-array form; heavy paths use _with_words + the _of_words
-    twin (see _ngrams_of_words)."""
-    return F.array_distinct(_ngrams(col, 3))
 
 
 def minhash_signatures(documents: DataFrame, k: int = MINHASH_K) -> DataFrame:
@@ -232,8 +217,8 @@ def lsh_dup_pairs(documents: DataFrame, k: int = MINHASH_K,
     # structs instead of unioning `bands` SELECTs of the same sigs plan.
     # The union form embedded the whole minhash explode+agg subtree once
     # per band per join side — 2×bands parquet scans and shingle explodes
-    # in the initial plan (r7 plan audit; runtime exchange reuse is AQE-
-    # dependent, this makes the single computation structural). Rows are
+    # in the initial plan (runtime exchange reuse is AQE-dependent, this
+    # makes the single computation structural). Rows are
     # identical: same (doc_id, band, bucket) triples, same band hash.
     def _band_bucket(b):
         parts = [F.col(f"sig_{b * rows_per_band + r}")
@@ -318,17 +303,16 @@ def simhash_fingerprints(documents: DataFrame) -> DataFrame:
     """(doc_id, simhash) — 64-bit simhash over whitespace tokens; near-dups
     have small Hamming distance.
 
-    Pure Catalyst (VERDICT r01 What's-wrong #3 — the round-1 per-row,
-    per-token Python loop is gone): explode(tokens) → md5 → 16 hex-digit
-    projections → 64 signed bit-vote sums in ONE hash aggregate (map-side
-    partial combine collapses each partition to a row per doc before the
-    shuffle) → sign-pack. Bit b of a token's hash = bit (b%4) of hex digit
+    Pure Catalyst, no per-row, per-token Python loop: explode(tokens) →
+    md5 → two 8-hex-digit projections → 64 signed bit-vote sums in ONE
+    hash aggregate (map-side partial combine collapses each partition to
+    a row per doc before the shuffle) → sign-pack. Bit b of a token's hash = bit (b%4) of hex digit
     15−b//4 of the md5 (first 8 bytes, big-endian) — matching simhash64_py
     and the DuckDB oracle exactly. Tokenless docs get simhash 0."""
     toks = fan_out(documents, "doc_id").select(
         "doc_id", _terms_expr().alias("tok"))
     hx = text_hash_expr(F.col("tok"))
-    # r7: TWO 8-hex-digit convs per token instead of sixteen 1-digit
+    # TWO 8-hex-digit convs per token instead of sixteen 1-digit
     # ones — `_hi` holds hex digits 0..7 (bits 32..63 of the big-endian
     # first 8 md5 bytes), `_lo` digits 8..15 (bits 0..31); bit b of the
     # 64-bit value is bit (b%4) of hex digit (15 − b//4), identically
@@ -363,8 +347,8 @@ def simhash_near_pairs(documents: DataFrame, max_hamming: int = 3) -> DataFrame:
     # one explode over an array of (blk, key) structs instead of a
     # 4-way union of SELECTs over the same fingerprint plan — the union
     # form embedded the whole token-explode + 64-sum aggregate subtree
-    # once per block per join side (8 parquet scans in the r7 plan
-    # audit); identical rows, single structural computation
+    # once per block per join side (8 parquet scans in the initial
+    # plan); identical rows, single structural computation
     blocks = (sh
               .select("doc_id", "simhash",
                       F.explode(F.array(*[
@@ -396,11 +380,12 @@ def dedup_clusters(documents: DataFrame, threshold: float = 0.7) -> DataFrame:
     list is `NOT is_keeper`). cluster_id = component-min doc_id (the
     canonical keeper); singleton docs are their own cluster.
 
-    Components come from imc.graph.connected_components, which raises
-    rather than return partial labels: a component left split would
-    leave a cluster with no keeper — its entire membership on the purge
-    list — and break the fixed-point contract the DuckDB recursive-CTE
-    oracle reproduces independently."""
+    Components come from imc.graph.connected_components: a pair graph of
+    at most graph.LOCAL_EDGES verified pairs is labelled in one numpy
+    pass on the driver, a larger one by distributed contraction rounds. It raises rather than return partial labels: a
+    component left split would leave a cluster with no keeper — its
+    entire membership on the purge list — and break the fixed-point
+    contract the DuckDB recursive-CTE oracle reproduces independently."""
     pairs = ngram_jaccard_pairs(documents, threshold)
     comp = graph.connected_components(
         documents.select(F.col("doc_id").alias("id")).distinct(),
@@ -468,7 +453,8 @@ def decontaminate(documents: DataFrame, benchmark: DataFrame,
     a document sharing ≥ min_hits distinct word-3-gram shingles with any
     benchmark text is flagged (the n-gram-collision method used for
     eval-set scrubbing; production runs use longer n-grams — the shingle
-    width lives in ONE place, _shingles, shared with minhash/Jaccard).
+    width lives in ONE place, _shingles_of_words, shared with
+    minhash/Jaccard).
 
     benchmark: DataFrame with a `text` column (the eval set). Scale
     shape: the benchmark's distinct shingle-hash set is SMALL (eval sets

@@ -1,6 +1,7 @@
-"""imc.graph.connected_components: exact labels against a union-find, a
-round count logarithmic in path length, a bounded plan-size estimate, no
-leaked caches, and a loud bound on rounds."""
+"""imc.graph.connected_components: exact labels against a union-find in
+both regimes (driver labelling, contraction rounds), a round count
+logarithmic in path length, a bounded plan-size estimate, no leaked
+caches, and a loud bound on rounds."""
 
 import random
 
@@ -27,8 +28,19 @@ def _oracle(ids, edges):
     return {x: order[uf.find(pos[x])] for x in ids}
 
 
+@pytest.fixture
+def contraction(monkeypatch):
+    """Forces the contraction rounds: every graph with an edge is above
+    the driver-labelling bound."""
+    monkeypatch.setattr(graph, "LOCAL_EDGES", 0)
+
+
+@pytest.mark.parametrize("local_edges", [graph.LOCAL_EDGES, 0],
+                         ids=["local", "contraction"])
 @pytest.mark.parametrize("seed", [3, 11])
-def test_connected_components_match_union_find(spark, seed):
+def test_connected_components_match_union_find(spark, monkeypatch, seed,
+                                               local_edges):
+    monkeypatch.setattr(graph, "LOCAL_EDGES", local_edges)
     rng = random.Random(seed)
     ids = rng.sample(range(-10**12, 10**12), 300)
     chunks = [ids[k:k + 30] for k in range(0, 300, 30)]
@@ -47,20 +59,44 @@ def test_connected_components_match_union_find(spark, seed):
     assert _components(spark, ids, edges) == _oracle(ids, edges)
 
 
-def test_connected_components_rounds_estimate_and_caches(spark):
+def _named_cached(sc):
+    rdds = sc._jsc.getPersistentRDDs()
+    return {int(k) for k in rdds.keySet().toArray()
+            if rdds.get(k).name() is not None}
+
+
+def test_connected_components_in_memory_path(spark):
+    """A graph under LOCAL_EDGES is labelled on the driver: a shuffled
+    10³-node path (the worst case for rounds) in at most 4 jobs (fill,
+    read, broadcast of the label table, join back), leaving no named
+    cache behind."""
+    rng = random.Random(5)
+    path = list(range(1000))
+    rng.shuffle(path)
+    ids = spark.createDataFrame([(i,) for i in path], "id long")
+    edges = spark.createDataFrame(list(zip(path, path[1:])), "a long, b long")
+    sc = spark.sparkContext
+    before = _named_cached(sc)
+    sc.setJobGroup("cc-local-path", "cc-local-path")
+    try:
+        out = graph.connected_components(ids, edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n = len(sc.statusTracker().getJobIdsForGroup("cc-local-path"))
+    assert n <= 4, n
+    assert _named_cached(sc) == before
+    assert {r.comp for r in out.collect()} == {0}
+
+
+def test_connected_components_rounds_estimate_and_caches(spark, contraction):
     """Sorted paths are the worst case for id-ordered contraction (n/2
     rounds); the job count must grow with log n instead. The inputs are
     range frames, so their size estimates are real sizes."""
     sc = spark.sparkContext
-
-    def named_cached():
-        rdds = sc._jsc.getPersistentRDDs()
-        return {int(k) for k in rdds.keySet().toArray()
-                if rdds.get(k).name() is not None}
-
     jobs = {}
     for n in (64, 1024):
-        before = named_cached()
+        before = _named_cached(sc)
         group = f"cc-path-{n}"
         sc.setJobGroup(group, group)
         try:
@@ -73,13 +109,14 @@ def test_connected_components_rounds_estimate_and_caches(spark):
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
         jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
-        assert len(named_cached() - before) <= 1
+        assert len(_named_cached(sc) - before) <= 1
     assert jobs[1024] <= 2.5 * jobs[64], jobs
     size = out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     assert len(str(size)) <= 20, size
 
 
-def test_connected_components_raises_past_max_rounds(spark, monkeypatch):
+def test_connected_components_raises_past_max_rounds(spark, monkeypatch,
+                                                     contraction):
     # priorities order 1 < 0 < 2, so on the path 1-2-0 node 0 stays its
     # own supernode in round 1 and the edge (1, 0) is left for round 2
     monkeypatch.setattr(graph, "MAX_ROUNDS", 1)

@@ -233,10 +233,11 @@ def test_dedup_clusters_components_and_keepers(spark, docs):
 
 
 def test_dedup_clusters_frees_superseded_label_tables(spark, docs):
-    """The components loop persists a label table, a node mapping and a
-    contracted edge list per round; only the last label table may stay
-    cached behind the result. The planted pair (200, 201) contracts in
-    one round. Dataset caches name their RDD after the cached plan; the
+    """The components engine persists its cut edge list and, in the
+    contraction regime, a label table, a node mapping and a contracted
+    edge list per round; only the last label table may stay cached
+    behind the result. The planted pairs here are labelled on the
+    driver. Dataset caches name their RDD after the cached plan; the
     unnamed persisted RDDs are localCheckpoints the result still reads."""
     def cached_rdds():
         rdds = spark.sparkContext._jsc.getPersistentRDDs()
@@ -263,6 +264,36 @@ def test_dedup_clusters_chain_transitivity(spark):
     out = textops.dedup_clusters(
         spark.createDataFrame(pdf), threshold=0.5).toPandas()
     assert set(out["cluster_id"]) <= {1}
+
+
+def _dedup_jobs(spark, documents, group):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        (textops.dedup_clusters(documents, threshold=0.7)
+         .write.format("noop").mode("overwrite").save())
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dedup_clusters_job_count_is_small_and_graph_free(spark, docs):
+    """A constant number of Spark jobs, whatever the pair graph: a graph
+    this small is labelled in one numpy pass on the driver, with no
+    contraction rounds. The planted pairs of `docs` and a 12-document
+    sliding-window chain (each document linked to its three nearest
+    windows on either side) start the same count."""
+    words = [f"t{i}" for i in range(100)]
+    chain = pd.DataFrame(
+        [(k, " ".join(words[3 * k:3 * k + 60]), "en", "s", 0)
+         for k in range(12)],
+        columns=["doc_id", "text", "lang", "source", "n_chars"])
+    n_docs = _dedup_jobs(spark, docs, "dedup-jobs-docs")
+    n_chain = _dedup_jobs(spark, spark.createDataFrame(chain),
+                          "dedup-jobs-chain")
+    assert n_docs <= 12, n_docs
+    assert n_docs == n_chain, (n_docs, n_chain)
 
 
 def test_train_split_deterministic_and_proportioned(spark, docs):
