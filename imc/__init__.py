@@ -12,7 +12,7 @@ Layout (SURVEY.md §7.8):
   cells.py     Morton/quadtree cell index (H3/S2-style, from scratch)
   config.py    pipeline parameters (TRACLUS ε / MinLns / γ / weights)
   partitioning.py the stage-partitioning policy (Python-stage count,
-               scan fan-out)
+               scan fan-out, hot keys, salted joins, sharded top-k)
   extract.py   pages → points (extract_text, parse_points pandas UDFs)
   segments.py  points → segments (window lead) + MDL partitioning
   joins.py     ε self-join / kNN join (cell prefilter + exact refine),

@@ -15,9 +15,10 @@ as ONE distributed join, not n point queries:
     a candidate row is kept only when its join cell IS the responsible
     cell, so every true pair survives exactly once and the second shuffle
     of the candidate set disappears (PBSM reference-point method).
-  skew: hot cells (corridor junctions) are salted — left side gets
-    salt = pmod(hash(seg_id), S), right side replicates S× — on top of
-    AQE's skew-join splitting (BASELINE.json:6 mandates explicit salting).
+  skew: hot cells (corridor junctions), found by partitioning.hot_keys
+    on a sample of the segments, are salted by partitioning.salt into
+    S = salt_buckets partitions, on top of AQE's skew-join splitting
+    (BASELINE.json:6 mandates explicit salting).
   phase 2 (refine): codegen'd bbox-gap prefilter, then the exact TRACLUS /
     Hausdorff distance as staged Catalyst expressions (with_traclus_dist —
     zero Python, zero Arrow); filter dist ≤ ε; canonical (a < b) — same
@@ -51,7 +52,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from imc.config import VENUE_STRIDE, IMCParams
-from imc.partitioning import fan_out
+from imc.partitioning import check_buckets, fan_out, hot_keys
+from imc.partitioning import salt as salt_sides
 
 _COORDS = ["x1", "y1", "x2", "y2"]
 
@@ -274,18 +276,11 @@ def _short_class(segs: DataFrame, g: float, split_factor: float) -> DataFrame:
 
 
 def _hot_cells(segs: DataFrame, g: float, r: float, factor: float) -> DataFrame:
-    """(cell, n) for cells whose cover count exceeds factor × mean — the
-    cheap pre-pass that drives salting (SURVEY.md §2.4 skew row). Runs on
-    a 10% sample (seeded, deterministic) and is pure SQL now that the
-    cover is; relative hotness is what matters, and a hot cell holding a
-    constant fraction of rows stays hot under uniform sampling. The ONE
-    implementation of the heat heuristic — eps_join's in-plan sampling
-    and hot_cell_keys' manifest materialization both call it."""
-    sample = segs.sample(fraction=0.1, seed=42)
-    counts = (_bbox_cover(sample, g, r)
-              .groupBy("cell").agg(F.count("*").alias("n")))
-    mean = counts.agg(F.avg("n")).collect()[0][0] or 0.0
-    return counts.filter(F.col("n") > factor * mean)
+    """(cell, n) for the hot cells of the segments' covers: the heat rule
+    run on sampled segments, covered after sampling. eps_join's in-plan
+    sampling and hot_cell_keys' manifest list both call it."""
+    return hot_keys(segs, ["cell"], factor,
+                    expand=lambda sample: _bbox_cover(sample, g, r))
 
 
 # manifest hot-cell lists are capped at the hottest this-many cells: the
@@ -298,14 +293,13 @@ def hot_cell_keys(segments: DataFrame, params: IMCParams | None = None,
                   limit: int = HOT_CELLS_CAP) -> list[int]:
     """Materialize the ε-join hot-cell key set for a segments table — the
     segments-stage manifest records it (pipeline stats_fn) so later
-    eps_join(hot_cells=...) calls skip the per-call sampling job (VERDICT
-    r04 What's-wrong #2: hidden eager work at plan-construction time).
+    eps_join(hot_cells=...) calls skip the per-call sampling job: no
+    hidden eager work at plan-construction time.
 
-    Heat is a PERFORMANCE heuristic only: the pair set is provably
-    identical for any hot set (salting replicates, never drops — salted ≡
-    unsalted is test-gated), so a stale, truncated, or differently-sampled
-    list can never change results — which is what makes persisting it in
-    a manifest sound. Delegates to the same _hot_cells/_short_class pair
+    Heat is a performance heuristic only (partitioning.salt is
+    salt-invariant), so a stale, truncated, or differently-sampled list
+    never changes results — which is what makes persisting it in a
+    manifest sound. Delegates to the same _hot_cells/_short_class pair
     eps_join uses, so the two paths cannot drift."""
     params = params or IMCParams()
     g = params.join_cell
@@ -333,7 +327,7 @@ def eps_join(segments: DataFrame, params: IMCParams | None = None,
     explodes quadratically in cover cells); candidate pairs touching a
     long segment dedupe by distinct on (a, b) instead of the responsible
     cell, bounded to that minority. split_factor=0 disables the split
-    (full-bbox covers for everything, the pre-r3 plan).
+    (full-bbox covers for everything).
 
     has_long=None (default) PROBES the input for long segments at plan
     construction time — a column-pruned pass over the coordinate columns
@@ -347,10 +341,12 @@ def eps_join(segments: DataFrame, params: IMCParams | None = None,
     construction time (one eager sample job when salt=True); passing a
     precomputed key list (hot_cell_keys — the pipeline reads it from the
     segments-stage manifest) makes plan construction job-free. Any list
-    is results-correct: heat only steers salting, and the pair set is
-    salt-invariant (test-gated).
+    is results-correct: heat only steers partitioning.salt, and the pair
+    set is salt-invariant.
     """
     params = params or IMCParams()
+    if salt:
+        check_buckets(params.salt_buckets, "salt_buckets")
     g = params.join_cell
     gap = params.gap_bound
     r = gap / 2.0
@@ -376,19 +372,10 @@ def eps_join(segments: DataFrame, params: IMCParams | None = None,
         else:
             hot = segments.sparkSession.createDataFrame(
                 [(int(c),) for c in hot_cells], "cell long")
-        hot = hot.withColumn("_hot", F.lit(True))
-        left = (cov.join(F.broadcast(hot), "cell", "left")
-                .withColumn("salt",
-                            F.when(F.col("_hot"), F.pmod(F.hash("seg_id"), F.lit(s)))
-                            .otherwise(F.lit(0)))
-                .drop("_hot"))
-        right = (cov.join(F.broadcast(hot), "cell", "left")
-                 .withColumn("salt",
-                             F.explode(F.when(F.col("_hot"),
-                                              F.sequence(F.lit(0), F.lit(s - 1)))
-                                       .otherwise(F.array(F.lit(0)))))
-                 .drop("_hot"))
-        join_keys = ["cell", "salt"]
+        hot = F.broadcast(hot.withColumn("_hot", F.lit(True)))
+        marked = cov.join(hot, "cell", "left")
+        left, right = salt_sides(marked, marked, F.col("_hot"), s, "seg_id")
+        join_keys = ["cell", "_salt"]
     else:
         left = right = cov
         join_keys = ["cell"]
@@ -427,26 +414,17 @@ def eps_join(segments: DataFrame, params: IMCParams | None = None,
                             *[F.col(c).alias(f"b{c}") for c in _COORDS],
                             "cell")
         if salt:
-            # same hot-cell protection as the short-short join (ADVICE r03:
-            # an unsalted long join re-concentrates a hot cell's entire
-            # right side against every long sub-cover row in one task):
-            # right side hashes into S salt buckets, long side replicates
-            # S×. The hot set is sampled from the short-class covers —
-            # long segments are a minority by the split threshold, so
-            # short covers dominate any genuinely hot cell.
-            l2 = (l2.join(F.broadcast(hot), "cell", "left")
-                  .withColumn("salt",
-                              F.explode(F.when(F.col("_hot"),
-                                               F.sequence(F.lit(0), F.lit(s - 1)))
-                                        .otherwise(F.array(F.lit(0)))))
-                  .drop("_hot"))
-            r2 = (r2.join(F.broadcast(hot), "cell", "left")
-                  .withColumn("salt",
-                              F.when(F.col("_hot"),
-                                     F.pmod(F.hash("b_seg"), F.lit(s)))
-                              .otherwise(F.lit(0)))
-                  .drop("_hot"))
-            long_keys = ["cell", "salt"]
+            # same hot-cell protection as the short-short join (unsalted,
+            # the long join re-concentrates a hot cell's entire right
+            # side against every long sub-cover row in one task): the
+            # all-segments side is the probe, the long minority the
+            # replicated build side. The hot set is sampled from the
+            # short-class covers — long segments are a minority by the
+            # split threshold, so short covers dominate any hot cell.
+            r2, l2 = salt_sides(r2.join(hot, "cell", "left"),
+                                l2.join(hot, "cell", "left"),
+                                F.col("_hot"), s, "b_seg")
+            long_keys = ["cell", "_salt"]
         else:
             long_keys = ["cell"]
         sw = F.col("a_seg") > F.col("b_seg")
@@ -473,13 +451,13 @@ def eps_join(segments: DataFrame, params: IMCParams | None = None,
     refined = (with_traclus_dist(uniq, params.w_perp, params.w_par, params.w_ang)
                if metric == "traclus"
                else uniq.withColumn("dist", hausdorff_dist_expr()))
-    # OPTIMIZER BARRIER before the ε filter (r7). Without it, filter
+    # OPTIMIZER BARRIER before the ε filter. Without it, filter
     # pushdown substitutes the staged refine columns into the `dist ≤ ε`
     # condition and pushes the fully-flattened TRACLUS tree INTO THE
     # JOIN CONDITION — a 169 KB expression (measured) whose generated
     # method blows Janino's 64 KB limit, so every execution paid a ~2 s
-    # failed whole-stage compile and then ran the stage unfused (r7
-    # profile: refine+count 4–10 s with the push vs 2.6 s unfused vs
+    # failed whole-stage compile and then ran the stage unfused
+    # (profiled: refine+count 4–10 s with the push vs 2.6 s unfused vs
     # sub-second for the join alone). The staged-projection design
     # exists precisely to evaluate each intermediate once; the push
     # undid it exponentially.

@@ -111,7 +111,7 @@ def refresh_manifest(spark: SparkSession, path: str, stage: str,
         "committed": True,
         "written_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
-    _write_json_atomic(_manifest_path(path), manifest)
+    write_json_atomic(_manifest_path(path), manifest)
     return written, snap
 
 
@@ -129,7 +129,7 @@ def _data_files(path: str) -> list[dict]:
     return out
 
 
-def _write_json_atomic(mp: str, payload: dict) -> None:
+def write_json_atomic(mp: str, payload: dict) -> None:
     """tmp-file + os.replace: a crash mid-write can never leave truncated
     manifest JSON (the torn state every reader would otherwise have to
     special-case)."""
@@ -162,7 +162,7 @@ def mark_uncommitted(path: str) -> None:
     with open(mp) as f:
         m = json.load(f)
     m["committed"] = False
-    _write_json_atomic(mp, m)
+    write_json_atomic(mp, m)
 
 
 def read_manifest(path: str) -> dict:

@@ -26,7 +26,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from imc import graph
-from imc.partitioning import fan_out
+from imc.manifest import write_json_atomic
+from imc.partitioning import fan_out, sharded_top_k
+from imc.partitioning import salt as salt_sides
 
 def _cos_expr(x, y):
     """Exact cosine as JVM array expressions, fixed dimension order, with
@@ -292,24 +294,24 @@ def train_ivf_centroids(vecs: np.ndarray, n_lists: int = 16,
 IVF_MANIFEST = "_ivf_index.json"
 
 
-def _ivf_fingerprint(embeddings: DataFrame, n_lists: int, iters: int,
-                     sample_n: int) -> str | None:
-    """Content identity of a trained IVF index: canonicalized logical
-    plan + input file listing + sizes + mtimes + training params (the
-    same resume rule pipeline._input_fingerprint uses — the plan hash
-    matters here too, review r5 wave 2: without it a FILTERED view over
-    the same parquet files would reuse centroids trained on the full
-    table). None — no stable identity ⟹ retrain per call — for
-    in-memory inputs AND for any file os.stat can't reach (review r5:
-    hashing bare names for remote hdfs://s3a:// paths would serve a
-    STALE index after an in-place rewrite under the same object names;
-    for an index, retraining is the safe failure)."""
+def _index_fingerprint(embeddings: DataFrame, tag: str,
+                       *params) -> str | None:
+    """Content identity of a trained index (tag "ivf" or "pq"):
+    canonicalized logical plan + input file listing + sizes + mtimes +
+    the tag and training params (the same resume rule
+    pipeline._input_fingerprint uses — the plan hash matters here too:
+    without it a FILTERED view over the same parquet files would reuse
+    an index trained on the full table). None — no stable identity ⟹
+    retrain per call — for in-memory inputs AND for any file os.stat
+    can't reach (hashing bare names for remote hdfs://s3a:// paths
+    would serve a STALE index after an in-place rewrite under the same
+    object names; for an index, retraining is the safe failure)."""
     import hashlib
     import os as _os
     files = sorted(embeddings.inputFiles())
     if not files:
         return None
-    h = hashlib.sha256(f"ivf|{n_lists}|{iters}|{sample_n}".encode())
+    h = hashlib.sha256("|".join([tag, *map(str, params)]).encode())
     plan = (embeddings._jdf.queryExecution().logical()
             .canonicalized().toString())
     h.update(f"plan|{plan}".encode())
@@ -324,11 +326,24 @@ def _ivf_fingerprint(embeddings: DataFrame, n_lists: int, iters: int,
     return h.hexdigest()[:24]
 
 
+def _training_sample(embeddings: DataFrame, sample_n: int) -> np.ndarray:
+    """The embeddings of ~sample_n rows as a float64 matrix, in ascending
+    vec_id order: the rows whose md5-bucket of vec_id is 0 mod K, K
+    sized from the row count (ivf_index's docstring has the rule)."""
+    n = embeddings.count()
+    k_mod = max(1, -(-n // sample_n))
+    bucket = F.pmod(
+        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8),
+               16, 10).cast("long"), F.lit(k_mod))
+    rows = (embeddings.filter(bucket == 0)
+            .select("vec_id", "embedding").orderBy("vec_id").collect())
+    return np.asarray([list(r["embedding"]) for r in rows], dtype=np.float64)
+
+
 def ivf_index(embeddings: DataFrame, index_dir: str, n_lists: int = 16,
               iters: int = 8, sample_n: int = 100_000) -> list:
     """Train-or-load the IVF coarse quantizer as a PERSISTED index
-    artifact (VERDICT r04 next-round #3: train_ivf_centroids was a
-    library function; this is the wired operator).
+    artifact: the wired operator around train_ivf_centroids.
 
     Training sample: a DETERMINISTIC md5-bucket subset of the table —
     keep vec_id where pmod(md5-bucket, K) == 0 with K sized so ~sample_n
@@ -348,7 +363,7 @@ def ivf_index(embeddings: DataFrame, index_dir: str, n_lists: int = 16,
     Returns the centroid list ann_topk_ivf(centroids=...) consumes."""
     import json
     import os as _os
-    fp = _ivf_fingerprint(embeddings, n_lists, iters, sample_n)
+    fp = _index_fingerprint(embeddings, "ivf", n_lists, iters, sample_n)
     mp = _os.path.join(index_dir, IVF_MANIFEST)
     if fp is not None and _os.path.exists(mp):
         try:
@@ -358,26 +373,16 @@ def ivf_index(embeddings: DataFrame, index_dir: str, n_lists: int = 16,
                 return m["centroids"]
         except (json.JSONDecodeError, OSError):
             pass
-    n = embeddings.count()
-    k_mod = max(1, -(-n // sample_n))
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8),
-               16, 10).cast("long"), F.lit(k_mod))
-    rows = (embeddings.filter(bucket == 0)
-            .select("vec_id", "embedding").orderBy("vec_id").collect())
-    mat = np.asarray([list(r["embedding"]) for r in rows], dtype=np.float64)
+    mat = _training_sample(embeddings, sample_n)
     cent = train_ivf_centroids(mat, n_lists, iters)
     out = [[float(x) for x in row] for row in cent]
     hot = _hot_lists_from_sample(mat, cent)
     if fp is not None:
         _os.makedirs(index_dir, exist_ok=True)
-        tmp = mp + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"fingerprint": fp, "n_lists": n_lists,
-                       "iters": iters, "sample_n": sample_n,
-                       "n_sampled": len(rows), "centroids": out,
-                       "hot_lists": hot}, f)
-        _os.replace(tmp, mp)
+        write_json_atomic(mp, {"fingerprint": fp, "n_lists": n_lists,
+                               "iters": iters, "sample_n": sample_n,
+                               "n_sampled": len(mat), "centroids": out,
+                               "hot_lists": hot})
     return out
 
 
@@ -389,11 +394,11 @@ IVF_HOT_FACTOR = 4.0
 def _hot_lists_from_sample(mat: "np.ndarray", cent: "np.ndarray",
                            factor: float = IVF_HOT_FACTOR) -> list[int]:
     """Hot-list ids from the (already driver-side) training sample —
-    zero extra Spark jobs, the manifest-style heat detection VERDICT
-    r05 #5 asked for (hot_cell_keys' pattern applied to IVF). Uses the
-    SAME assignment rule ann_topk_ivf ranks with — round(cos, 6) desc,
-    lowest list id on ties — and the same hot test _hot_cells uses
-    (count > factor x mean). Heat is perf-only: salting replicates,
+    zero extra Spark jobs, the manifest-style heat detection of
+    hot_cell_keys applied to IVF. Uses the SAME assignment rule
+    ann_topk_ivf ranks with — round(cos, 6) desc, lowest list id on
+    ties — and the heat test of partitioning.hot_keys (count > factor x
+    mean) over the whole sample. Heat is perf-only: salting replicates,
     never drops, so a stale/missing list can't change results."""
     if len(mat) == 0 or len(cent) == 0:
         return []
@@ -501,7 +506,7 @@ def ivf_hot_lists_refresh(embeddings: DataFrame, index_dir: str,
         counts[int(r["list_id"])] = float(r["n"])
     hot = sorted(int(i) for i in
                  np.nonzero(counts > factor * counts.mean())[0])
-    # ADVICE r06: (a) with no readable manifest, persist a MINIMAL one
+    # (a) with no readable manifest, persist a MINIMAL one
     # (centroids + hot_lists) so ivf_hot_lists() actually serves the
     # refresh result, as the docstring promises; (b) when caller-passed
     # centroids DISAGREE with the manifest's stored ones, skip the
@@ -522,10 +527,7 @@ def ivf_hot_lists_refresh(embeddings: DataFrame, index_dir: str,
         man = {"centroids": [[float(x) for x in c] for c in centroids]}
     man["hot_lists"] = hot
     _os.makedirs(_os.path.dirname(mp) or ".", exist_ok=True)
-    tmp = mp + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(man, f)
-    _os.replace(tmp, mp)
+    write_json_atomic(mp, man)
     return hot
 
 
@@ -543,8 +545,8 @@ def ann_topk_ivf(embeddings: DataFrame, k: int = 5, probe_mod: int = 50,
     train_ivf_centroids over a driver-side sample) for a TRAINED
     quantizer whose centroid literals the Spark plan and the DuckDB
     oracle share bit-for-bit; default None falls back to sampled-seed
-    (the n_lists smallest vec_ids' own vectors — the pre-r4 behavior,
-    kept as the zero-training baseline and adversarial-recall foil).
+    (the n_lists smallest vec_ids' own vectors — kept as the
+    zero-training baseline and adversarial-recall foil).
     Assignment ranks on (round(cos, 6) DESC, list_id) — deterministic
     across engines.
 
@@ -556,44 +558,41 @@ def ann_topk_ivf(embeddings: DataFrame, k: int = 5, probe_mod: int = 50,
     source) salts exactly like a hot ε-join cell — pass
     hot_lists=ivf_hot_lists(index_dir) (persisted in the index
     manifest by train-time sampling and/or the refresh pass, zero
-    detection jobs at query time): hot-list member rows spread over
-    salt_mod shuffle
-    partitions via pmod(hash(neighbor_id), salt_mod) while probe rows
-    to hot lists fan out salt_mod x (probes are ~n_probe/probe_mod of
-    the corpus — the cheap side). Each member row keeps exactly one
-    salt, so the candidate set — and the output — is salt-invariant
-    (test-gated salted == unsalted). Training runs once on a bounded
-    driver-side sample — FAISS-style — and is reused across queries."""
+    detection jobs at query time): partitioning.salt spreads hot-list
+    member rows over salt_mod shuffle partitions by hash(neighbor_id)
+    and replicates the probe rows of hot lists salt_mod x (probes are
+    ~n_probe/probe_mod of the corpus — the cheap side); the output is
+    salt-invariant. Training runs once on a bounded driver-side sample
+    — FAISS-style — and is reused across queries."""
     if centroids is None:
         # zero-training fallback: the n_lists smallest vec_ids' own
         # vectors, pulled driver-side (bounded: n_lists rows)
         centroids = [list(r["embedding"]) for r in
                      (embeddings.orderBy("vec_id").limit(n_lists)
                       .select("embedding").collect())]
-    # ranked Voronoi lists per vector WITHOUT a corpus-wide shuffle
-    # (r6): the seeds are a handful of literals, so per-row ranking is
-    # a pure map-side pass. The pre-r6 form crossJoined a broadcast
-    # seed table and ranked with row_number() over
-    # Window.partitionBy(vec_id): correct, but it REPARTITIONED THE
-    # WHOLE CORPUS BY vec_id just to rank a bounded in-row list.
-    # r7 (VERDICT r06 #5): base rows consume only the ARGMAX list, so
-    # they take array_min over the scored structs — O(n_lists) per
-    # corpus row instead of the full O(n_lists log n_lists) array_sort;
-    # only the probe minority ranks the whole list for its top-n_probe.
-    # Ordering is identical either way: struct(-round(cos,6), list_id)
-    # ascending == (cos DESC, list_id ASC), ties to the lowest list id,
-    # and array_min ≡ array_sort(...)[0] under that total order.
-    # r7 (VERDICT r06 #4): the refine score is computed in the list
-    # join's map stage, so the candidate dedup (and the top-k window)
-    # shuffle (ids, score) only — see the comment at the dedup below.
-    # the scored Column OBJECT is constructed once in Python (one
-    # nested-array literal, one Py4J conversion — building it per
-    # branch measurably doubled plan-construction time) and embedded
-    # directly in both branch expressions. Deliberately NOT shared via
+    # ranked Voronoi lists per vector WITHOUT a corpus-wide shuffle:
+    # the seeds are a handful of literals, so per-row ranking is a
+    # pure map-side pass (a crossJoin of a broadcast seed table ranked
+    # by row_number() over Window.partitionBy(vec_id) is correct, but
+    # REPARTITIONS THE WHOLE CORPUS BY vec_id to rank an in-row list).
+    # Base rows consume only the ARGMAX list, so they take array_min
+    # over the scored structs — O(n_lists) per corpus row instead of
+    # the full O(n_lists log n_lists) array_sort; only the probe
+    # minority ranks the whole list for its top-n_probe. Ordering is
+    # identical either way: struct(-round(cos,6), list_id) ascending ==
+    # (cos DESC, list_id ASC), ties to the lowest list id, and
+    # array_min ≡ array_sort(...)[0] under that total order.
+    # The refine score is computed in the list join's map stage, so the
+    # candidate dedup (and the top-k window) shuffle (ids, score) only —
+    # see the comment at the dedup below. The scored Column OBJECT is
+    # constructed once in Python (one nested-array literal, one Py4J
+    # conversion — building it per branch measurably doubled
+    # plan-construction time) and embedded directly in both branch
+    # expressions. Deliberately NOT shared via
     # an intermediate projection: Spark 4.1 mis-binds the lambda
     # attributes when array_min consumes the aliased transform column
     # through a collapsed project (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND,
-    # reproduced r7).
+    # reproduced).
     scored = _scored_lists_expr(centroids)
     fanned = fan_out(embeddings, "vec_id")
     lists = fanned.select(
@@ -611,26 +610,15 @@ def ann_topk_ivf(embeddings: DataFrame, k: int = 5, probe_mod: int = 50,
         hot = F.array(*[F.lit(int(h)).cast("long")
                         for h in sorted(set(hot_lists))])
         is_hot = F.array_contains(hot, F.col("list_id").cast("long"))
-        lists = lists.withColumn(
-            "_salt",
-            F.when(is_hot, F.pmod(F.hash("neighbor_id"),
-                                  F.lit(salt_mod)))
-            .otherwise(F.lit(0)).cast("int"))
-        # explode is a generator — it cannot nest inside another
-        # expression (no .cast on it); both branches are array<int>
-        # already, matching the lists side's int _salt
-        probes = probes.withColumn(
-            "_salt",
-            F.explode(F.when(is_hot,
-                             F.sequence(F.lit(0), F.lit(salt_mod - 1)))
-                      .otherwise(F.array(F.lit(0)))))
+        lists, probes = salt_sides(lists, probes, is_hot, salt_mod,
+                                   "neighbor_id")
         cand = probes.join(lists, ["list_id", "_salt"])
     else:
         cand = probes.join(lists, "list_id")
     # score in the join's map stage, then dedup on (ids, score) only —
     # the dedup and window exchanges carry ~24 bytes/row, not 2×d
-    # doubles (r7, guide §2.3 / VERDICT r06 #4; a pair sharing several
-    # probed lists scores once per list, deterministic-identical)
+    # doubles (guide §2.3; a pair sharing several probed lists scores
+    # once per list, deterministic-identical)
     cand = (cand
             .filter(F.col("query_id") != F.col("neighbor_id"))
             .withColumn("score",
@@ -674,31 +662,6 @@ def train_pq_codebooks(vecs: "np.ndarray", m: int = 8, k_pq: int = 16,
             for j in range(m)]
 
 
-def _pq_fingerprint(embeddings: DataFrame, m: int, k_pq: int, iters: int,
-                    sample_n: int) -> str | None:
-    """Content identity of a trained PQ index — the _ivf_fingerprint
-    rule (canonical plan + file listing + sizes + mtimes + params) with
-    a pq| prefix; None ⟹ retrain per call."""
-    import hashlib
-    import os as _os
-    files = sorted(embeddings.inputFiles())
-    if not files:
-        return None
-    h = hashlib.sha256(f"pq|{m}|{k_pq}|{iters}|{sample_n}".encode())
-    plan = (embeddings._jdf.queryExecution().logical()
-            .canonicalized().toString())
-    h.update(f"plan|{plan}".encode())
-    for f in files:
-        local = f[7:] if f.startswith("file://") else (
-            f[5:] if f.startswith("file:") else f)
-        try:
-            st = _os.stat(local)
-        except OSError:
-            return None
-        h.update(f"{f}|{st.st_size}|{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:24]
-
-
 def pq_index(embeddings: DataFrame, index_dir: str, m: int = 8,
              k_pq: int = 16, iters: int = 8,
              sample_n: int = 100_000) -> list:
@@ -711,7 +674,7 @@ def pq_index(embeddings: DataFrame, index_dir: str, m: int = 8,
     [m][k_pq][d/m] codebook list ann_topk_pq(codebooks=...) consumes."""
     import json
     import os as _os
-    fp = _pq_fingerprint(embeddings, m, k_pq, iters, sample_n)
+    fp = _index_fingerprint(embeddings, "pq", m, k_pq, iters, sample_n)
     mp = _os.path.join(index_dir, PQ_MANIFEST)
     if fp is not None and _os.path.exists(mp):
         try:
@@ -721,23 +684,13 @@ def pq_index(embeddings: DataFrame, index_dir: str, m: int = 8,
                 return man["codebooks"]
         except (json.JSONDecodeError, OSError):
             pass
-    n = embeddings.count()
-    k_mod = max(1, -(-n // sample_n))
-    bucket = F.pmod(
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8),
-               16, 10).cast("long"), F.lit(k_mod))
-    rows = (embeddings.filter(bucket == 0)
-            .select("vec_id", "embedding").orderBy("vec_id").collect())
-    mat = np.asarray([list(r["embedding"]) for r in rows], dtype=np.float64)
+    mat = _training_sample(embeddings, sample_n)
     books = train_pq_codebooks(mat, m, k_pq, iters)
     if fp is not None:
         _os.makedirs(index_dir, exist_ok=True)
-        tmp = mp + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"fingerprint": fp, "m": m, "k_pq": k_pq,
-                       "iters": iters, "sample_n": sample_n,
-                       "n_sampled": len(rows), "codebooks": books}, f)
-        _os.replace(tmp, mp)
+        write_json_atomic(mp, {"fingerprint": fp, "m": m, "k_pq": k_pq,
+                               "iters": iters, "sample_n": sample_n,
+                               "n_sampled": len(mat), "codebooks": books})
     return books
 
 
@@ -785,16 +738,8 @@ def ann_topk_pq(embeddings: DataFrame, k: int = 5, probe_mod: int = 50,
     probe batch with O(m) work per pair; the exact re-score touches
     k·|probes| rows. All pure Catalyst — no UDF, no Python."""
     if codebooks is None:
-        n = embeddings.count()
-        k_mod = max(1, -(-n // 100_000))
-        bucket = F.pmod(
-            F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8),
-                   16, 10).cast("long"), F.lit(k_mod))
-        rows = (embeddings.filter(bucket == 0)
-                .select("vec_id", "embedding").orderBy("vec_id").collect())
-        mat = np.asarray([list(r["embedding"]) for r in rows],
-                         dtype=np.float64)
-        codebooks = train_pq_codebooks(mat, m, k_pq, iters=8)
+        codebooks = train_pq_codebooks(
+            _training_sample(embeddings, 100_000), m, k_pq, iters=8)
     m = len(codebooks)
     k_pq = len(codebooks[0])
     ds = len(codebooks[0][0])
@@ -803,7 +748,7 @@ def ann_topk_pq(embeddings: DataFrame, k: int = 5, probe_mod: int = 50,
     # enters the plan as ONE nested-array literal walked by transform —
     # not k_pq × ds scattered literal nodes, whose Catalyst analysis
     # cost dominated the query at bench scale (same fix as
-    # _ranked_lists_expr). r7: the per-subspace encode/LUT expressions
+    # _ranked_lists_expr). The per-subspace encode/LUT expressions
     # are BUILT AS SQL STRINGS parsed by one F.expr call each — the
     # Py4J Column/lambda composition cost ~1.3 s of driver time per
     # query construction (inside the benched region); the parsed
@@ -854,37 +799,23 @@ def ann_topk_pq(embeddings: DataFrame, k: int = 5, probe_mod: int = 50,
     adc = F.round(
         sum(F.element_at(F.col(f"_lut_{j}"), F.col(f"_code_{j}") + 1)
             for j in range(m)), 6)
-    # r7 (VERDICT r06 #1 — the one flagged scale-killer): the ADC prune
-    # is the repo's EXACT two-phase sharded top-k (the top_terms /
-    # source_quota pattern), not a per-query global window. Phase 1
-    # ranks within (query_id, pmod(hash(neighbor_id), shards)) and
-    # keeps ≤ k·refine rows per shard — the full-corpus ADC scan
-    # spreads over `shards` reduce tasks per probe instead of funneling
-    # every corpus row for a probe through ONE task; phase 2 re-ranks
-    # the ≤ shards·k·refine survivors per probe. Output is provably
-    # identical: any row in the global ADC top-(k·refine) is in its
-    # shard's top-(k·refine) (ranks only shrink under subsetting), so
-    # phase 1 never drops a final row, and phase 2 computes the same
-    # total (_adc DESC, neighbor_id ASC) order over a superset.
-    w1 = Window.partitionBy("query_id", "_shard").orderBy(
-        F.desc("_adc"), F.asc("neighbor_id"))
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("_adc"),
-                                                F.asc("neighbor_id"))
-    cand = (base.withColumnRenamed("vec_id", "neighbor_id")
-            .crossJoin(F.broadcast(probes))
-            .filter(F.col("query_id") != F.col("neighbor_id"))
-            .withColumn("_adc", adc)
-            .withColumn("_shard", F.pmod(F.hash("neighbor_id"),
-                                         F.lit(shards)))
-            .withColumn("_r1", F.row_number().over(w1))
-            .filter(F.col("_r1") <= k * refine)
-            .withColumn("_arank", F.row_number().over(w2))
-            .filter(F.col("_arank") <= k * refine)
-            .select("query_id", "neighbor_id"))
+    # the ADC prune is partitioning.sharded_top_k, not a per-query
+    # global window: one window per probe would funnel every corpus row
+    # for that probe through ONE task (the one flagged scale-killer of
+    # this operator); sharded by hash(neighbor_id), the full-corpus ADC
+    # scan spreads over `shards` reduce tasks per probe, same output
+    scored = (base.withColumnRenamed("vec_id", "neighbor_id")
+              .crossJoin(F.broadcast(probes))
+              .filter(F.col("query_id") != F.col("neighbor_id"))
+              .withColumn("_adc", adc))
+    cand = sharded_top_k(scored, ["query_id"],
+                         [F.desc("_adc"), F.asc("neighbor_id")],
+                         k * refine, "neighbor_id", shards,
+                         "_arank").select("query_id", "neighbor_id")
 
     # exact refine: the candidate set is tiny (≤ |probes|·k·refine id
     # pairs), so it BROADCASTS into the embedding joins — the corpus
-    # table is scanned once and never shuffled here (pre-r7: two
+    # table is scanned once and never shuffled here (not two
     # corpus-keyed shuffle joins for ~2k candidate rows)
     q_emb = (embeddings.filter(F.col("vec_id") % probe_mod == 0)
              .select(F.col("vec_id").alias("query_id"),

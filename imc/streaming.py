@@ -115,7 +115,7 @@ def _record_stream_metrics(out_dir: str, op: str, q,
     except (OSError, ValueError):
         doc = {"op": op, "runs": []}
     doc["runs"].append(run)
-    manifest._write_json_atomic(mp, doc)
+    manifest.write_json_atomic(mp, doc)
     return run
 
 PAGES_SCHEMA = T.StructType([

@@ -30,7 +30,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from imc import graph
-from imc.partitioning import fan_out
+from imc.partitioning import fan_out, hot_keys, sharded_top_k
+from imc.partitioning import salt as salt_sides
 
 MINHASH_K = 8
 LSH_BANDS = 4  # 2 signature rows per band
@@ -207,10 +208,10 @@ def lsh_dup_pairs(documents: DataFrame, k: int = MINHASH_K,
 
     salt=True applies the ε-join's hot-key treatment to HOT BUCKETS
     (boilerplate text puts thousands of near-identical docs in one bucket,
-    overloading a single reducer): a sampled count pre-pass finds buckets
-    > hot_factor × mean, the left side gets salt = pmod(hash(doc_id), S),
-    the right side is replicated S× — output pairs identical (test-gated),
-    reducer load split S ways. Off by default (one extra job)."""
+    overloading a single reducer): partitioning.hot_keys finds the hot
+    buckets (one sampled job) and partitioning.salt spreads each over
+    salt_buckets reducers by hash(doc_id) — same output pairs. Off by
+    default (one extra job)."""
     sigs = minhash_signatures(documents, k)
     rows_per_band = k // bands
     # ONE pass over the signatures: explode an array of (band, bucket)
@@ -237,24 +238,13 @@ def lsh_dup_pairs(documents: DataFrame, k: int = MINHASH_K,
                        F.col("_bb.bucket").alias("bucket")))
 
     if salt:
-        s = salt_buckets
-        counts = (buckets.sample(fraction=0.1, seed=42)
-                  .groupBy("band", "bucket").agg(F.count("*").alias("n")))
-        mean = counts.agg(F.avg("n")).collect()[0][0] or 0.0
-        hot = (counts.filter(F.col("n") > hot_factor * mean)
-               .select("band", "bucket").withColumn("_hot", F.lit(True)))
-        left = (buckets.join(F.broadcast(hot), ["band", "bucket"], "left")
-                .withColumn("salt",
-                            F.when(F.col("_hot"), F.pmod(F.hash("doc_id"), F.lit(s)))
-                            .otherwise(F.lit(0)))
-                .drop("_hot"))
-        right = (buckets.join(F.broadcast(hot), ["band", "bucket"], "left")
-                 .withColumn("salt",
-                             F.explode(F.when(F.col("_hot"),
-                                              F.sequence(F.lit(0), F.lit(s - 1)))
-                                       .otherwise(F.array(F.lit(0)))))
-                 .drop("_hot"))
-        keys = ["band", "bucket", "salt"]
+        hot = F.broadcast(
+            hot_keys(buckets, ["band", "bucket"], hot_factor)
+            .select("band", "bucket", F.lit(True).alias("_hot")))
+        marked = buckets.join(hot, ["band", "bucket"], "left")
+        left, right = salt_sides(marked, marked, F.col("_hot"),
+                                 salt_buckets, "doc_id")
+        keys = ["band", "bucket", "_salt"]
     else:
         left = right = buckets
         keys = ["band", "bucket"]
@@ -418,32 +408,14 @@ def source_quota(documents: DataFrame, cap: int = 20,
     deterministically (ascending doc_id): the source-mixing primitive of
     corpus assembly (cap boilerplate-heavy domains before training).
 
-    EXACT two-phase top-k (VERDICT r04 What's-wrong #1: a single window
-    per source puts a mega-source's entire row set through one task
-    before the rn filter — a genuine straggler when one domain holds a
-    double-digit share of a 100 TB corpus):
-      phase 1 ranks within (source, pmod(hash(doc_id), shards)) and keeps
-        rn1 ≤ cap — the mega-source's rows spread over `shards` tasks,
-        each emitting at most cap survivors;
-      phase 2 re-ranks the ≤ shards×cap survivors per source by doc_id
-        and keeps rn ≤ cap.
-    Exactness: any doc in a source's global doc_id-ascending top-cap is
-    in its shard's top-cap (ranks only shrink under subsetting), so
-    phase 1 never drops a final row — the shard hash only PRUNES, which
-    is why the engine-specific hash never has to match the oracle's.
-    Output is identical to the single-window form for every shard count;
-    the explain-gated test pins the phase-1 exchange to (source, shard)."""
-    shard = F.pmod(F.hash("doc_id"), F.lit(shards))
-    w1 = Window.partitionBy("source", "_shard").orderBy("doc_id")
-    survivors = (documents
-                 .select("doc_id", "source", shard.alias("_shard"))
-                 .withColumn("_rn1", F.row_number().over(w1))
-                 .filter(F.col("_rn1") <= cap))
-    w2 = Window.partitionBy("source").orderBy("doc_id")
-    return (survivors
-            .select("doc_id", "source",
-                    F.row_number().over(w2).cast("long").alias("rn"))
-            .filter(F.col("rn") <= cap))
+    A single window per source would put a mega-source's entire row set
+    through one task before the rn filter — a genuine straggler when one
+    domain holds a double-digit share of a 100 TB corpus — so this is
+    partitioning.sharded_top_k sharded by hash(doc_id): the output equals
+    the single window for every shard count, and the shard hash never
+    has to match the oracle's."""
+    return sharded_top_k(documents.select("doc_id", "source"), ["source"],
+                         ["doc_id"], cap, "doc_id", shards, "rn")
 
 
 def decontaminate(documents: DataFrame, benchmark: DataFrame,
@@ -694,16 +666,13 @@ def boilerplate_scrub(documents: DataFrame, min_docs: int = 2,
     ("Privacy Policy" x 10^9 docs) is ONE group in the count agg, not a
     join fan-out, because the join carries only the per-line verdict.
 
-    The verdict join-back is SALTED (VERDICT r05 #3 watch item, made
-    engine-owned): the verdict side is 1 row/key, so a planet-hot line
-    would otherwise funnel its 10^9 probe rows through one shuffle
-    partition unless AQE's skew-split happens to be on. Each verdict row
-    is replicated salt_mod x (tiny build side x 16), probe rows pick
-    pmod(hash(doc_id, pos), salt_mod) — the hot key spreads over
-    salt_mod partitions in ANY session config. Each line still matches
-    exactly one replica, so the output is salt-invariant (test-gated
-    salted == unsalted)."""
-    salt_mod = max(1, int(salt_mod))
+    The verdict join-back is SALTED: the verdict side is 1 row/key, so a
+    planet-hot line would otherwise funnel its 10^9 probe rows through
+    one shuffle partition unless AQE's skew-split happens to be on.
+    Every key is salted (partitioning.salt with is_hot = true): the tiny
+    verdict side is replicated salt_mod x, probe rows spread by
+    hash(doc_id, pos) over salt_mod partitions in ANY session config,
+    and the output is salt-invariant."""
     lines = (documents
              .select("doc_id", F.posexplode(F.split(F.col("text"), "\n"))
                      .alias("pos", "line")))
@@ -716,17 +685,10 @@ def boilerplate_scrub(documents: DataFrame, min_docs: int = 2,
               .agg(F.count_distinct("doc_id").alias("nd"))
               .where(F.col("nd") >= min_docs)
               .select("k"))
-    boiler_s = (boiler
-                .withColumn("_ksalt",
-                            F.explode(F.sequence(F.lit(0),
-                                                 F.lit(salt_mod - 1))))
-                .withColumn("_boiler", F.lit(True)))
-    lsalt = F.pmod(F.hash("doc_id", "pos"), F.lit(salt_mod))
-    marked = (lines
-              .withColumn("_lsalt", lsalt)
-              .join(boiler_s,
-                    (key == F.col("k")) & (F.col("_lsalt") == F.col("_ksalt")),
-                    "left")
+    probe, build = salt_sides(lines.withColumn("k", key),
+                              boiler.withColumn("_boiler", F.lit(True)),
+                              F.lit(True), salt_mod, "doc_id", "pos")
+    marked = (probe.join(build, ["k", "_salt"], "left")
               .select("doc_id", "pos", "line",
                       F.coalesce(F.col("_boiler"), F.lit(False))
                       .alias("_boiler")))
@@ -741,7 +703,20 @@ def boilerplate_scrub(documents: DataFrame, min_docs: int = 2,
                                   "\n")).alias("clean_sha")))
 
 
-# PII patterns pinned to the RE2 ∩ Java-regex common dialect so the
+def _shingle_occurrences(documents: DataFrame, k: int) -> DataFrame:
+    """(doc_id, pos, h): every word-k-gram shingle occurrence, pos
+    1-indexed, h its 16-byte binary md5 — not the 32-char hex string: the
+    shingle identity only feeds internal aggs/joins, and unhex(md5) is
+    injective on md5 output, so the verdicts are the same with half the
+    key bytes through every exchange (guide §2.3 narrower types)."""
+    return (_with_words(fan_out(documents, "doc_id"))
+            .select("doc_id",
+                    F.posexplode(_ngrams_of_words(F.col("_w"), k))
+                    .alias("pos0", "s"))
+            .select("doc_id", (F.col("pos0") + 1).alias("pos"),
+                    F.unhex(text_hash_expr("s")).alias("h")))
+
+
 def substring_dup_spans(documents: DataFrame, k: int = 8,
                         min_docs: int = 2, salt_mod: int = 16) -> DataFrame:
     """(doc_id, span_start, span_end, n_shingles) — cross-document EXACT
@@ -765,12 +740,10 @@ def substring_dup_spans(documents: DataFrame, k: int = 8,
     codegen md5 projection (the inherent ~1-row-per-token cost, same as
     minhash); the duplicate verdict is a (h, doc_id)-then-h two-phase
     hash agg, map-side combined, never a collected set; the verdict
-    join-back is SALTED exactly like boilerplate_scrub's (verdict rows
-    replicated salt_mod x, probes pick pmod(hash(doc_id, pos)) — a
-    planet-hot shingle spreads over salt_mod partitions in any session
-    config, and each probe matches exactly one replica so output is
-    salt-invariant); island merging is two doc-keyed windows over only
-    the HIT rows (bounded by doc length, one shuffle).
+    join-back is SALTED exactly like boilerplate_scrub's (a planet-hot
+    shingle spreads over salt_mod partitions in any session config);
+    island merging is two doc-keyed windows over only the HIT rows
+    (bounded by doc length, one shuffle).
 
     The shingle explode is COMPUTED TWICE (verdict branch + probe
     branch) by design: materializing it once would mean shuffling or
@@ -779,30 +752,14 @@ def substring_dup_spans(documents: DataFrame, k: int = 8,
     original documents — at 100 TB the re-scan wins decisively; the
     bench row's sf0.1 cost (~2x the single-pass time) is that choice
     priced honestly. substring_scrub makes the same call."""
-    salt_mod = max(1, int(salt_mod))
-    sh = (_with_words(fan_out(documents, "doc_id"))
-          .select("doc_id",
-                  F.posexplode(_ngrams_of_words(F.col("_w"), k))
-                  .alias("pos0", "s"))
-          .select("doc_id", (F.col("pos0") + 1).alias("pos"),
-                  # 16-byte binary key, not the 32-char hex string: the
-                  # shingle identity only feeds internal aggs/joins, and
-                  # unhex(md5) is injective on md5 output — same
-                  # verdicts, half the key bytes through every exchange
-                  # (guide §2.3 narrower types)
-                  F.unhex(text_hash_expr("s")).alias("h")))
+    sh = _shingle_occurrences(documents, k)
     dup = (sh.groupBy("h")
            .agg(F.count_distinct("doc_id").alias("nd"))
            .where(F.col("nd") >= min_docs)
-           .select(F.col("h").alias("hk"))
-           .withColumn("_ksalt",
-                       F.explode(F.sequence(F.lit(0), F.lit(salt_mod - 1)))))
-    hits = (sh.withColumn("_lsalt",
-                          F.pmod(F.hash("doc_id", "pos"), F.lit(salt_mod)))
-            .join(dup,
-                  (F.col("h") == F.col("hk"))
-                  & (F.col("_lsalt") == F.col("_ksalt")),
-                  "left_semi")
+           .select("h"))
+    probe, build = salt_sides(sh, dup, F.lit(True), salt_mod,
+                              "doc_id", "pos")
+    hits = (probe.join(build, ["h", "_salt"], "left_semi")
             .select("doc_id", "pos"))
     w = Window.partitionBy("doc_id").orderBy("pos")
     isl = (hits
@@ -838,39 +795,22 @@ def substring_scrub(documents: DataFrame, k: int = 8,
     100 TB shape: occurrence extraction is the same one explode + md5
     projection as substring_dup_spans; the keeper verdict is one hash
     agg (min over a (doc_id, pos) struct rides the same two-phase
-    combine as the countDistinct); the verdict join-back is SALTED
-    (hot-shingle spread, salt-invariant output); cover fan-out is <= k
+    combine as the countDistinct); the verdict join-back is SALTED like
+    boilerplate_scrub's (hot-shingle spread); cover fan-out is <= k
     rows per removed occurrence, deduped by (doc_id, pos); the rebuild
     is the boilerplate_scrub idiom — a (doc_id, pos)-keyed flag join
     (composite-unique keys, no skew surface) and one doc-bounded
     collect/sort/join aggregate."""
-    salt_mod = max(1, int(salt_mod))
-    sh = (_with_words(fan_out(documents, "doc_id"))
-          .select("doc_id",
-                  F.posexplode(_ngrams_of_words(F.col("_w"), k))
-                  .alias("pos0", "s"))
-          .select("doc_id", (F.col("pos0") + 1).alias("pos"),
-                  # 16-byte binary key, not the 32-char hex string: the
-                  # shingle identity only feeds internal aggs/joins, and
-                  # unhex(md5) is injective on md5 output — same
-                  # verdicts, half the key bytes through every exchange
-                  # (guide §2.3 narrower types)
-                  F.unhex(text_hash_expr("s")).alias("h")))
+    sh = _shingle_occurrences(documents, k)
     dup = (sh.groupBy("h")
            .agg(F.count_distinct("doc_id").alias("nd"),
                 F.min(F.struct("doc_id", "pos")).alias("kp"))
            .where(F.col("nd") >= min_docs)
-           .select(F.col("h").alias("hk"),
-                   F.col("kp.doc_id").alias("k_doc"),
-                   F.col("kp.pos").alias("k_pos"))
-           .withColumn("_ksalt",
-                       F.explode(F.sequence(F.lit(0), F.lit(salt_mod - 1)))))
-    rem = (sh.withColumn("_lsalt",
-                         F.pmod(F.hash("doc_id", "pos"), F.lit(salt_mod)))
-           .join(dup,
-                 (F.col("h") == F.col("hk"))
-                 & (F.col("_lsalt") == F.col("_ksalt")),
-                 "inner")
+           .select("h", F.col("kp.doc_id").alias("k_doc"),
+                   F.col("kp.pos").alias("k_pos")))
+    probe, build = salt_sides(sh, dup, F.lit(True), salt_mod,
+                              "doc_id", "pos")
+    rem = (probe.join(build, ["h", "_salt"])
            .where(~((F.col("doc_id") == F.col("k_doc"))
                     & (F.col("pos") == F.col("k_pos"))))
            .select("doc_id", "pos"))
@@ -898,6 +838,7 @@ def substring_scrub(documents: DataFrame, k: int = 8,
                                   " ")).alias("clean_sha")))
 
 
+# PII patterns pinned to the RE2 ∩ Java-regex common dialect so the
 # Spark expression and the DuckDB oracle compile the same automaton:
 # character classes, \d, \b, bounded repetition only — no lookaround.
 PII_EMAIL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -1022,12 +963,9 @@ def top_terms(documents: DataFrame, k: int = 10,
 
     Tokens are _terms_expr — the repo's one case-folded whitespace-token
     definition, shared with simhash and the oracles. Plan shape:
-    explode → ONE partial-agg shuffle on (lang, term) → the same exact
-    two-phase top-k as source_quota, but over AGGREGATED term counts:
-    phase 1 ranks within (lang, pmod(hash(term), shards)) — a term in
-    its language's global top-k is in its shard's top-k (ranks only
-    shrink under subsetting), so keeping rk1 ≤ k never drops a final
-    row; phase 2 re-ranks the ≤ shards×k survivors per language.
+    explode → ONE partial-agg shuffle on (lang, term) → the exact
+    two-phase partitioning.sharded_top_k over the AGGREGATED term counts,
+    sharded by hash(term).
 
     100 TB posture: the heavy explode aggregates map-side before the
     shuffle; web-scale vocabularies (billions of junk terms) never pass
@@ -1037,14 +975,5 @@ def top_terms(documents: DataFrame, k: int = 10,
               .select("lang", _terms_expr().alias("term"))
               .groupBy("lang", "term")
               .agg(F.count("*").alias("n")))
-    w1 = (Window.partitionBy("lang", "_shard")
-          .orderBy(F.desc("n"), "term"))
-    survivors = (counts
-                 .withColumn("_shard", F.pmod(F.hash("term"), F.lit(shards)))
-                 .withColumn("_rk1", F.row_number().over(w1))
-                 .filter(F.col("_rk1") <= k))
-    w2 = Window.partitionBy("lang").orderBy(F.desc("n"), "term")
-    return (survivors
-            .select("lang", "term", "n",
-                    F.row_number().over(w2).cast("long").alias("rk"))
-            .filter(F.col("rk") <= k))
+    return sharded_top_k(counts, ["lang"], [F.desc("n"), "term"], k,
+                         "term", shards, "rk")

@@ -762,7 +762,7 @@ def test_boilerplate_hot_line_salted_join_engine_owned(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
     joins = re.findall(r"SortMergeJoin \[([^\]]*)\], \[([^\]]*)\]", plan)
     joins += re.findall(r"ShuffledHashJoin \[([^\]]*)\], \[([^\]]*)\]", plan)
-    assert any("_lsalt" in a and "_ksalt" in b for a, b in joins), plan[:3000]
+    assert any("_salt" in a and "_salt" in b for a, b in joins), plan[:3000]
 
 
 def test_corpus_mix_weighted_hand_computed_and_sharded_window(spark):
@@ -962,7 +962,7 @@ def test_substring_dup_spans_hand_fixture_salted_and_plan_gated(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
     joins = re.findall(r"SortMergeJoin \[([^\]]*)\], \[([^\]]*)\]", plan)
     joins += re.findall(r"ShuffledHashJoin \[([^\]]*)\], \[([^\]]*)\]", plan)
-    assert any("_lsalt" in a and "_ksalt" in b for a, b in joins), plan[:3000]
+    assert any("_salt" in a and "_salt" in b for a, b in joins), plan[:3000]
 
 
 def test_substring_scrub_keep_first_hand_fixture(spark):
