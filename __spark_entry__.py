@@ -36,9 +36,11 @@ Query groups (SURVEY.md §2 coverage):
 from __future__ import annotations
 
 import dataclasses
+import functools
 import glob
 import hashlib
 import os
+import shutil
 import sys
 from collections.abc import Callable
 
@@ -71,14 +73,22 @@ def _fixture_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
 _IMC_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "imc")
 
 
-def _imc_digest() -> str:
-    """Digest of the imc/*.py sources (names and bytes)."""
+@functools.cache
+def _digest_of(imc_dir: str) -> str:
     h = hashlib.sha256()
-    for p in sorted(glob.glob(os.path.join(_IMC_DIR, "*.py"))):
+    for p in sorted(glob.glob(os.path.join(imc_dir, "*.py"))):
         h.update(os.path.basename(p).encode() + b"\0")
         with open(p, "rb") as f:
             h.update(f.read())
     return h.hexdigest()[:16]
+
+
+def _imc_digest() -> str:
+    """Digest of the imc/*.py sources (names and bytes), read once per
+    process: a source edit while a process runs must not make its Spark
+    queries write one cache name while its DuckDB twins, built earlier
+    by oracle_sql(), read another."""
+    return _digest_of(_IMC_DIR)
 
 
 def _seg_cache_name() -> str:
@@ -93,6 +103,19 @@ def _assign_cache_name() -> str:
     return f"assignments_{PARAMS.params_hash()}_{_imc_digest()}.parquet"
 
 
+def _write_cache(df: DataFrame, path: str) -> None:
+    """Write a fixture cache, then delete the caches of other source
+    digests under the same params hash: only the current engine's
+    output is ever read."""
+    df.write.mode("overwrite").parquet(path)
+    name = os.path.basename(path)
+    kind, params_hash = name.split("_")[:2]
+    for old in glob.glob(os.path.join(os.path.dirname(path),
+                                      f"{kind}_{params_hash}_*.parquet")):
+        if os.path.basename(old) != name:
+            shutil.rmtree(old, ignore_errors=True)
+
+
 def _fixture_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MDL segments for the fixture corpus, cached as parquet next to the
     pages fixture (deterministic content; several queries() entries share
@@ -101,7 +124,7 @@ def _fixture_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     seg_path = os.path.join(os.path.dirname(pages_path), _seg_cache_name())
     if not os.path.exists(seg_path):
         pts = extract.pages_to_points(spark.read.parquet(pages_path))
-        segments.mdl_segments(pts).write.mode("overwrite").parquet(seg_path)
+        _write_cache(segments.mdl_segments(pts), seg_path)
     return spark.read.parquet(seg_path)
 
 
@@ -114,8 +137,8 @@ def _fixture_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not os.path.exists(a_path):
         segs = _fixture_segments(spark, sf_dir)
         segs.cache()
-        (dbscan.dbscan(segs, joins.eps_join(segs, PARAMS), PARAMS)
-         .write.mode("overwrite").parquet(a_path))
+        _write_cache(dbscan.dbscan(segs, joins.eps_join(segs, PARAMS), PARAMS),
+                     a_path)
     return spark.read.parquet(a_path)
 
 

@@ -70,6 +70,5 @@ def corridor_polygons(segments: DataFrame, assignments: DataFrame,
     joined = (assignments.select("seg_id", "cluster_id")
               .join(segments.select("seg_id", "x1", "y1", "x2", "y2"), "seg_id"))
     return (joined
-            .repartition(python_stage_partitions(segments.sparkSession),
-                         "cluster_id")
+            .repartition(python_stage_partitions(joined), "cluster_id")
             .groupBy("cluster_id").applyInPandas(_buffer, CORRIDOR_SCHEMA))

@@ -87,7 +87,8 @@ def dbscan(segments: DataFrame, eps_pairs: DataFrame,
         .union(cross.select(F.col("b").alias("id"))).distinct(),
         cross)
 
-    n = python_stage_partitions(segments.sparkSession)
+    n = max(python_stage_partitions(segments),
+            python_stage_partitions(eps_pairs))
 
     def bucketed(df: DataFrame, key: str) -> DataFrame:
         # a venue's group is itself unless a cross-venue pair links it;

@@ -284,7 +284,8 @@ def _hot_cells(segs: DataFrame, g: float, r: float, factor: float) -> DataFrame:
 
 
 # manifest hot-cell lists are capped at the hottest this-many cells: the
-# list lives in the stage manifest JSON, which must stay O(1)-sized
+# list lives in the stage manifest JSON, which must stay O(1)-sized, and
+# eps_join carries it in its plan as a literal
 HOT_CELLS_CAP = 4096
 
 
@@ -340,13 +341,18 @@ def eps_join(segments: DataFrame, params: IMCParams | None = None,
     hot_cells=None (default) samples the input for hot cells at plan
     construction time (one eager sample job when salt=True); passing a
     precomputed key list (hot_cell_keys — the pipeline reads it from the
-    segments-stage manifest) makes plan construction job-free. Any list
-    is results-correct: heat only steers partitioning.salt, and the pair
-    set is salt-invariant.
+    segments-stage manifest) makes plan construction job-free: the list
+    marks hot cells as an `isin` literal, so at most HOT_CELLS_CAP keys
+    are taken and a longer list raises ValueError before any job. Any
+    list is results-correct: heat only steers partitioning.salt, and the
+    pair set is salt-invariant.
     """
     params = params or IMCParams()
     if salt:
         check_buckets(params.salt_buckets, "salt_buckets")
+    if hot_cells is not None and len(hot_cells) > HOT_CELLS_CAP:
+        raise ValueError(f"{len(hot_cells)} hot cells exceed HOT_CELLS_CAP "
+                         f"({HOT_CELLS_CAP}): the list is a plan literal")
     g = params.join_cell
     gap = params.gap_bound
     r = gap / 2.0
@@ -368,12 +374,19 @@ def eps_join(segments: DataFrame, params: IMCParams | None = None,
             # heat sampled over the short class only — it alone feeds the
             # salted PBSM join (and keeps the sample cover away from the
             # quadratic long-bbox case)
-            hot = _hot_cells(short, g, r, params.hot_cell_factor).select("cell")
+            hot = F.broadcast(_hot_cells(short, g, r, params.hot_cell_factor)
+                              .select("cell").withColumn("_hot", F.lit(True)))
+
+            def mark(df: DataFrame) -> DataFrame:
+                return df.join(hot, "cell", "left")
         else:
-            hot = segments.sparkSession.createDataFrame(
-                [(int(c),) for c in hot_cells], "cell long")
-        hot = F.broadcast(hot.withColumn("_hot", F.lit(True)))
-        marked = cov.join(hot, "cell", "left")
+            # a capped key list is a plan literal (an InSet once optimized):
+            # no frame to build, so no job and no Python worker
+            keys = [int(c) for c in hot_cells]
+
+            def mark(df: DataFrame) -> DataFrame:
+                return df.withColumn("_hot", F.col("cell").isin(keys))
+        marked = mark(cov)
         left, right = salt_sides(marked, marked, F.col("_hot"), s, "seg_id")
         join_keys = ["cell", "_salt"]
     else:
@@ -421,9 +434,8 @@ def eps_join(segments: DataFrame, params: IMCParams | None = None,
             # replicated build side. The hot set is sampled from the
             # short-class covers — long segments are a minority by the
             # split threshold, so short covers dominate any hot cell.
-            r2, l2 = salt_sides(r2.join(hot, "cell", "left"),
-                                l2.join(hot, "cell", "left"),
-                                F.col("_hot"), s, "b_seg")
+            r2, l2 = salt_sides(mark(r2), mark(l2), F.col("_hot"), s,
+                                "b_seg")
             long_keys = ["cell", "_salt"]
         else:
             long_keys = ["cell"]

@@ -129,6 +129,15 @@ def _data_files(path: str) -> list[dict]:
     return out
 
 
+def local_path(uri: str) -> str | None:
+    """The filesystem path of a file URI as Spark lists it (file:/p or
+    file:///p); None for any other scheme."""
+    for prefix in ("file://", "file:"):
+        if uri.startswith(prefix):
+            return uri[len(prefix):]
+    return None
+
+
 def write_json_atomic(mp: str, payload: dict) -> None:
     """tmp-file + os.replace: a crash mid-write can never leave truncated
     manifest JSON (the torn state every reader would otherwise have to

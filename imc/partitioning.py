@@ -6,6 +6,19 @@ per row (numpy kernels behind mapInPandas/applyInPandas) or per-row
 hashing/scoring in the JVM, not bytes — the cost model of *Accelerating
 Python UDFs in Vectorized Query Execution* (CIDR 2022). Spark's own
 sizing is by bytes, so left alone it hands such stages too few tasks.
+The same cost model bounds a Python stage from the other side: its
+vectorized work pays off only over full batches, and each task pays a
+fixed worker set-up first. PySpark 4.1's worker_util.setup_spark_files
+calls importlib.invalidate_caches() on every task, which re-reads the
+directories of the worker's zipimporters — measured on Python 3.11,
+~0.10 s of worker CPU for the spark-core jar and ~0.14 s for the twelve
+pyspark.zip entries, per task. An empty applyInPandas/cogroup partition
+starts no Python (a 4–6 ms task), while mapInPandas runs every
+partition, empty or not. So python_stage_partitions gives a Python
+stage one task per Arrow batch of input rows, fan_out spreads only JVM
+stages, and no frame is built from a Python list: createDataFrame over
+Python rows runs a PythonRDD job whose worker environment differs from
+the SQL runners', so Spark forks a second Python daemon for it.
 
 Skew: a key holding a large share of rows would otherwise run through
 one task, whatever the partition count. Three remedies, each written
@@ -21,8 +34,11 @@ not AQE's skew-join splitting is on.
 
 from __future__ import annotations
 
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from imc.manifest import local_path
 
 # heat is estimated from this seeded fraction of the rows: relative
 # hotness is what matters, and a key holding a constant share of rows
@@ -31,25 +47,49 @@ HEAT_SAMPLE = 0.1
 HEAT_SEED = 42
 
 
-def python_stage_partitions(spark) -> int:
-    """Explicit partition count for shuffles feeding a PYTHON-KERNEL
-    stage (mapInPandas / applyInPandas over numpy kernels).
+def python_stage_partitions(df: DataFrame) -> int:
+    """Explicit partition count for the shuffle feeding a PYTHON-KERNEL
+    stage (mapInPandas / applyInPandas over numpy kernels) whose input
+    is `df`: one task per Arrow batch of input rows — a task holding
+    less than a batch is all fixed worker set-up (module docstring) —
+    clamped to [1, cap]. cap is the session's shuffle parallelism floored
+    at 2× defaultParallelism, so at cluster scale the operator inherits
+    the cluster's shuffle tuning.
 
-    AQE's partition coalescing sizes post-shuffle partitions by BYTES
-    (advisoryPartitionSizeInBytes) and cannot see that the downstream
-    stage's cost is Python CPU per row: a ~10 MB point shuffle feeding
-    the MDL walk coalesced onto 5 tasks and serialized 13 s of kernel
-    CPU. A USER-SPECIFIED repartition count is exempt from AQE
-    coalescing, so these stages pin one: the session's configured
-    shuffle parallelism floored at 2× defaultParallelism — both session
-    knobs, nothing hard-coded to this box, and at cluster scale the
-    operator simply inherits the cluster's shuffle tuning."""
+    A USER-SPECIFIED repartition count is exempt from AQE coalescing,
+    which sizes post-shuffle partitions by BYTES: a ~10 MB point shuffle
+    feeding the MDL walk coalesced onto 5 tasks and serialized 13 s of
+    kernel CPU.
+
+    Rows come from the parquet footers of df.inputFiles(), read on the
+    driver (no job) until they reach the cap's worth of batches; they
+    bound the input from above through the filters, projections and key
+    joins these stages read. The cap is kept where no count is at hand:
+    a plan leaf that is not a file scan (in-memory or checkpointed
+    frames), a file that is not local parquet, or a batch size ≤ 0."""
+    spark = df.sparkSession
     try:
         conf_n = int(str(spark.conf.get("spark.sql.shuffle.partitions",
                                         "200")))
     except (TypeError, ValueError):  # e.g. "auto" on some builds
         conf_n = 200
-    return max(conf_n, spark.sparkContext.defaultParallelism * 2)
+    cap = max(conf_n, spark.sparkContext.defaultParallelism * 2)
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    paths = [local_path(f) for f in df.inputFiles()]
+    if batch <= 0 or None in paths or any(
+            leaves.apply(i).nodeName() != "LogicalRelation"
+            for i in range(leaves.size())):
+        return cap
+    rows = 0
+    for p in paths:
+        try:
+            rows += pq.read_metadata(p).num_rows
+        except (OSError, ValueError):  # not a parquet file: no footer
+            return cap
+        if rows >= cap * batch:
+            return cap
+    return max(1, -(-rows // batch))
 
 
 def fan_out(df: DataFrame, key: str) -> DataFrame:
@@ -57,7 +97,8 @@ def fan_out(df: DataFrame, key: str) -> DataFrame:
     unless its scan already packs into at least that many splits.
 
     A small parquet packs into one or a few scan splits, which serializes
-    the map-side kernel stage that follows onto a core or two. Spark packs
+    the map-side JVM stage that follows (hashing, scoring) onto a core or
+    two; Python stages are sized by python_stage_partitions instead. Spark packs
     files into splits of maxPartitionBytes, charging openCostInBytes per
     file, so the scan is left alone once Σ size + files × openCost
     reaches want × maxPartitionBytes. The size is the optimized plan's

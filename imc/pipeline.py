@@ -24,6 +24,7 @@ import os
 import uuid
 from contextlib import contextmanager
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -64,10 +65,8 @@ def _input_fingerprint(pages: DataFrame) -> str:
     plan = pages._jdf.queryExecution().logical().canonicalized().toString()
     h.update(f"plan|{plan}".encode())
     for f in files:
-        local = f[7:] if f.startswith("file://") else (
-            f[5:] if f.startswith("file:") else f)
         try:
-            st = os.stat(local)
+            st = os.stat(manifest.local_path(f) or f)
             h.update(f"{f}|{st.st_size}|{st.st_mtime_ns}".encode())
         except OSError:
             h.update(f.encode())
@@ -323,11 +322,11 @@ def run_incremental(spark: SparkSession, new_pages: DataFrame, out_dir: str,
         # keeps working across the format upgrade (review r5: without
         # this, cross-venue deltas r4 merged exactly were refused by the
         # fallback scan). The next commit writes the side table.
-        old_vs_df = spark.createDataFrame(
-            [(int(k), float(v[0]), float(v[1]), float(v[2]), float(v[3]),
-              float(v[4])) for k, v in old_vs_raw.items()],
-            "venue long, x0 double, x1 double, y0 double, y1 double, "
-            "max_len double")
+        ext = list(old_vs_raw.values())
+        old_vs_df = spark.createDataFrame(pa.table(
+            {"venue": pa.array([int(k) for k in old_vs_raw], pa.int64()),
+             **{c: pa.array([float(e[i]) for e in ext], pa.float64())
+                for i, c in enumerate(("x0", "x1", "y0", "y1", "max_len"))}}))
     gb = params.gap_bound
     if old_vs_df is not None:
         # Seed extents are the HULL of each affected venue's OLD and NEW
@@ -363,9 +362,9 @@ def run_incremental(spark: SparkSession, new_pages: DataFrame, out_dir: str,
                     f"{limit}) — the batch effectively touches most of the "
                     f"corpus, so a full pipeline run is cheaper and safer; "
                     f"no stage was modified")
-            aff_df = spark.createDataFrame(
-                [(int(v),) for v in sorted(closure)],
-                "venue long").localCheckpoint(eager=True)
+            aff_df = spark.createDataFrame(pa.table(
+                {"venue": pa.array(sorted(closure), pa.int64())})
+            ).localCheckpoint(eager=True)
             affected = sorted(closure)
 
     def in_aff(df: DataFrame, key: str | None = None,
@@ -575,10 +574,9 @@ def _venue_halo_closure_lazy(old_vs_df: DataFrame, aff_df: DataFrame,
     frontier = [[r["x0"], r["x1"], r["y0"], r["y1"]] for r in seed_rows]
     frontier += [list(map(float, e[:4])) for e in new_ext.values()]
     while frontier:
-        fdf = spark.createDataFrame(
-            [(float(e[0]), float(e[1]), float(e[2]), float(e[3]))
-             for e in frontier],
-            "fx0 double, fx1 double, fy0 double, fy1 double")
+        fdf = spark.createDataFrame(pa.table(
+            {c: pa.array([float(e[i]) for e in frontier], pa.float64())
+             for i, c in enumerate(("fx0", "fx1", "fy0", "fy1"))}))
         pruned = old_vs_df.filter(
             (F.col("x0") <= max(e[1] for e in frontier) + gb)
             & (F.col("x1") >= min(e[0] for e in frontier) - gb)

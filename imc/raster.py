@@ -22,7 +22,7 @@ from pyspark.sql import types as T
 from imc import rasterops
 from imc.config import VENUE_STRIDE, IMCParams
 from imc.kernels import grid_traverse_batch
-from imc.partitioning import fan_out, python_stage_partitions
+from imc.partitioning import python_stage_partitions
 
 TRAJ_VENUE_STRIDE = VENUE_STRIDE  # single source: imc.config
 
@@ -57,9 +57,9 @@ def rasterize(segments: DataFrame, params: IMCParams | None = None) -> DataFrame
                                 "gy": gy.astype(np.int32)})
 
     # project first: mapInPandas is opaque to pruning through the exchange
-    segments = fan_out(segments.select("traj_id", "x1", "y1", "x2", "y2"),
-                       "traj_id")
+    segments = segments.select("traj_id", "x1", "y1", "x2", "y2")
     return (segments
+            .repartition(python_stage_partitions(segments), "traj_id")
             .mapInPandas(cells, _CELL_ROWS_SCHEMA)
             .groupBy("venue", "gx", "gy")
             .agg(F.count("*").alias("hits")))
@@ -100,6 +100,5 @@ def extract_polygons(raster: DataFrame, params: IMCParams | None = None) -> Data
 
     # venue count bounds the useful parallelism; repartition only spreads it
     return (raster
-            .repartition(python_stage_partitions(raster.sparkSession),
-                         "venue")
+            .repartition(python_stage_partitions(raster), "venue")
             .groupBy("venue").applyInPandas(_extract, POLYGON_SCHEMA))

@@ -145,10 +145,9 @@ def mdl_segments(points: DataFrame) -> DataFrame:
             if f is not None:
                 yield f
 
+    points = points.select("traj_id", "seq", "x", "y")
     df = (points
-          .select("traj_id", "seq", "x", "y")
-          .repartition(python_stage_partitions(points.sparkSession),
-                       "traj_id")
+          .repartition(python_stage_partitions(points), "traj_id")
           .sortWithinPartitions("traj_id", "seq")
           .mapInPandas(_mdl_partitioned, SEGMENT_SCHEMA))
     df = _with_features(df).filter(F.col("len") > 0)

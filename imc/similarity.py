@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from imc import graph
-from imc.manifest import write_json_atomic
+from imc.manifest import local_path, write_json_atomic
 from imc.partitioning import fan_out, sharded_top_k
 from imc.partitioning import salt as salt_sides
 
@@ -316,10 +316,8 @@ def _index_fingerprint(embeddings: DataFrame, tag: str,
             .canonicalized().toString())
     h.update(f"plan|{plan}".encode())
     for f in files:
-        local = f[7:] if f.startswith("file://") else (
-            f[5:] if f.startswith("file:") else f)
         try:
-            st = _os.stat(local)
+            st = _os.stat(local_path(f) or f)
         except OSError:
             return None
         h.update(f"{f}|{st.st_size}|{st.st_mtime_ns}".encode())

@@ -48,6 +48,5 @@ def representative_trajectories(segments: DataFrame, assignments: DataFrame,
     # the repartition satisfies the grouping distribution, so
     # applyInPandas adds no second exchange
     return (joined
-            .repartition(python_stage_partitions(segments.sparkSession),
-                         "cluster_id")
+            .repartition(python_stage_partitions(joined), "cluster_id")
             .groupBy("cluster_id").applyInPandas(_sweep, REP_SCHEMA))

@@ -19,27 +19,56 @@ def test_entry_smoke(spark):
     assert set(df.columns) == {"a_seg", "b_seg", "dist", "a_tile", "b_tile"}
 
 
+def _copy_sources(dst, flip_last_byte_of=None):
+    dst.mkdir()
+    src = os.path.join(os.path.dirname(entrymod.__file__), "imc")
+    for name in os.listdir(src):
+        if name.endswith(".py"):
+            with open(os.path.join(src, name), "rb") as f:
+                data = bytearray(f.read())
+            if name == flip_last_byte_of:
+                data[-1] ^= 1
+            (dst / name).write_bytes(bytes(data))
+
+
 def test_fixture_cache_names_track_engine_sources(tmp_path, monkeypatch):
     """The cached segments/assignments fixtures are keyed by the imc/*.py
     sources too: one changed source byte must change both cache names, so
-    the oracles never compare against output written by older code."""
-    real = (entrymod._seg_cache_name(), entrymod._assign_cache_name())
-    src = tmp_path / "imc"
-    src.mkdir()
-    for name in os.listdir(entrymod._IMC_DIR):
-        if name.endswith(".py"):
-            with open(os.path.join(entrymod._IMC_DIR, name), "rb") as f:
-                (src / name).write_bytes(f.read())
-    monkeypatch.setattr(entrymod, "_IMC_DIR", str(src))
-    before = (entrymod._seg_cache_name(), entrymod._assign_cache_name())
+    the oracles never compare against output written by older code. The
+    digest is read once per process, so an edit while a process runs
+    leaves its names unchanged: its Spark queries and DuckDB twins
+    always name the same cache."""
+    def names():
+        return (entrymod._seg_cache_name(), entrymod._assign_cache_name())
+
+    real = names()
+    _copy_sources(tmp_path / "same")
+    monkeypatch.setattr(entrymod, "_IMC_DIR", str(tmp_path / "same"))
+    before = names()
     assert before == real  # the bytes decide, not the directory
-    joins = src / "joins.py"
+    joins = tmp_path / "same" / "joins.py"
     data = bytearray(joins.read_bytes())
     data[-1] ^= 1
     joins.write_bytes(bytes(data))
-    after = (entrymod._seg_cache_name(), entrymod._assign_cache_name())
+    assert names() == before  # read once per process
+    _copy_sources(tmp_path / "edited", flip_last_byte_of="joins.py")
+    monkeypatch.setattr(entrymod, "_IMC_DIR", str(tmp_path / "edited"))
+    after = names()
     assert before[0] != after[0] and before[1] != after[1]
     assert all(entrymod.PARAMS.params_hash() in n for n in before + after)
+
+
+def test_fixture_cache_write_removes_other_digests(spark, tmp_path):
+    """Writing a cache deletes the caches of other source digests under
+    the same params hash, and nothing else."""
+    for name in ("segments_p1_old1.parquet", "segments_p1_old2.parquet",
+                 "segments_p2_old3.parquet", "assignments_p1_old4.parquet"):
+        (tmp_path / name).mkdir()
+    entrymod._write_cache(spark.range(3),
+                          str(tmp_path / "segments_p1_new.parquet"))
+    assert sorted(os.listdir(tmp_path)) == [
+        "assignments_p1_old4.parquet", "segments_p1_new.parquet",
+        "segments_p2_old3.parquet"]
 
 
 def test_queries_outside_driver_snapshot_are_pinned():

@@ -81,29 +81,71 @@ def test_salted_equals_unsalted(spark, seg_df):
     assert a == b
 
 
-def test_salted_equals_unsalted_hot_fixture(spark):
-    """Skew robustness: on the hot-cell fixture (~30% of walks through one
-    junction) the salted join still produces the exact pair set — with a
-    LONG segment crossing the junction, so the long join's hot-cell
-    salting (ADVICE r03: previously unsalted) is exercised against real
-    hot cells, not just the .otherwise(0) path."""
+# at the default hot_cell_factor (20) the hot fixture has no hot cell;
+# at 1.0 its junction cells are hot
+HOT_PARAMS = IMCParams(eps=1.2, min_lns=3, hot_cell_factor=1.0)
+
+
+@pytest.fixture(scope="module")
+def seg_hot(spark):
+    """MDL segments of the hot-cell fixture (~30% of walks through one
+    junction), with a LONG segment crossing the junction."""
     path = gen_pages.ensure_pages(sf=0.001, hot=True)
     pts = extract.pages_to_points(spark.read.parquet(path))
     long_row = spark.createDataFrame(
         pd.DataFrame([(999_000_000, 9999, -40.0, 20.0, 90.0, 20.0)],
                      columns=["seg_id", "traj_id", "x1", "y1", "x2", "y2"]))
-    seg_hot = (segments.mdl_segments(pts).filter("traj_id % 50 < 12")
-               .select("seg_id", "traj_id", "x1", "y1", "x2", "y2")
-               .unionByName(long_row))
-    seg_hot.cache().count()
-    plain = joins.eps_join(seg_hot, PARAMS, salt=False).toPandas()
-    salted = joins.eps_join(seg_hot, PARAMS, salt=True).toPandas()
-    assert set(zip(plain["a_seg"], plain["b_seg"])) == \
-        set(zip(salted["a_seg"], salted["b_seg"]))
+    df = (segments.mdl_segments(pts).filter("traj_id % 50 < 12")
+          .select("seg_id", "traj_id", "x1", "y1", "x2", "y2")
+          .unionByName(long_row))
+    df.cache().count()
+    yield df
+    df.unpersist()
+
+
+def _pairs(df) -> set:
+    pdf = df.toPandas()
+    return set(zip(pdf["a_seg"], pdf["b_seg"]))
+
+
+def test_salted_equals_unsalted_hot_fixture(spark, seg_hot):
+    """Skew robustness: on the hot-cell fixture the salted join, with hot
+    cells sampled in its own plan, still produces the exact pair set —
+    the long join's hot-cell salting (ADVICE r03: previously unsalted)
+    is exercised against real hot cells, not just the .otherwise(0)
+    path."""
+    plain = _pairs(joins.eps_join(seg_hot, HOT_PARAMS, salt=False))
+    assert _pairs(joins.eps_join(seg_hot, HOT_PARAMS, salt=True)) == plain
     assert len(plain) > 0
     # (the long segment contributes candidates through the hot junction
     # cells — exactness of long-involving PAIRS at a pair-producing ε is
     # covered by test_eps_join_split_long_equals_bruteforce)
+
+
+def test_manifest_hot_cells_equal_unsalted_hot_fixture(spark, seg_hot):
+    """The pipeline's path: hot cells from hot_cell_keys (as the segments
+    manifest records them) mark the salted joins through a plan literal
+    — no frame built from Python rows, so no ExistingRDD scan and no
+    Python RDD job — and the pairs equal the unsalted join's. A list
+    longer than HOT_CELLS_CAP raises before any job."""
+    hot = joins.hot_cell_keys(seg_hot, HOT_PARAMS)
+    assert hot
+    out = joins.eps_join(seg_hot, HOT_PARAMS, has_long=True, hot_cells=hot)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+    assert _pairs(out) == _pairs(joins.eps_join(seg_hot, HOT_PARAMS,
+                                                salt=False))
+
+    sc = spark.sparkContext
+    group = "test_hot_cells_cap"
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(ValueError, match="HOT_CELLS_CAP"):
+            joins.eps_join(seg_hot, HOT_PARAMS,
+                           hot_cells=list(range(joins.HOT_CELLS_CAP + 1)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_knn_equals_bruteforce(spark, seg_df):

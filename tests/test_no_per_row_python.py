@@ -1,7 +1,8 @@
 """CI guard (SURVEY.md §7.3-4): the input_hint mandates vectorized
 pandas/Arrow UDFs only — no per-row Python `udf()` anywhere in the package;
-the stage-partitioning policy is read in one module, and the skew
-remedies are written in one module."""
+the stage-partitioning policy is read in one module, the skew
+remedies are written in one module, and no frame is built from Python
+rows."""
 
 import ast
 import os
@@ -125,3 +126,42 @@ def test_skew_remedies_written_in_one_module():
                 found |= {(fn, func, what)
                           for func, what in _skew_writes(tree)}
     assert found == allowed, found ^ allowed
+
+
+def _list_built_frames(tree):
+    """(enclosing function, line) for every createDataFrame call whose
+    data argument is a list, tuple, comprehension or generator."""
+    literal = (ast.List, ast.Tuple, ast.ListComp, ast.SetComp,
+               ast.GeneratorExp)
+    out = []
+
+    def visit(node, func):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) \
+                and node.func.attr == "createDataFrame":
+            data = node.args[:1] + [k.value for k in node.keywords
+                                    if k.arg == "data"]
+            if any(isinstance(d, literal) for d in data):
+                out.append((func, node.lineno))
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(tree, None)
+    return out
+
+
+def test_no_frame_built_from_python_rows():
+    """createDataFrame over Python rows runs parallelize and a PythonRDD
+    job, whose worker environment differs from the SQL runners' so that
+    Spark forks a second Python daemon; frames built in the package come
+    from Arrow tables (a LocalRelation, no job) or plan literals."""
+    bad = []
+    for root, _dirs, files in os.walk(PKG):
+        for fn in files:
+            if fn.endswith(".py"):
+                with open(os.path.join(root, fn)) as f:
+                    tree = ast.parse(f.read())
+                bad += [(fn, func, line)
+                        for func, line in _list_built_frames(tree)]
+    assert not bad, bad

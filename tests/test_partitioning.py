@@ -1,6 +1,7 @@
-"""partitioning: the scan fan-out decision, read from driver-side metadata
-only; salted joins and the sharded top-k give the plain join's and the
-single window's rows; a bad bucket count fails before any job."""
+"""partitioning: the scan fan-out and Python-stage count decisions, read
+from driver-side metadata only; salted joins and the sharded top-k give
+the plain join's and the single window's rows; a bad bucket count fails
+before any job."""
 
 import re
 
@@ -64,6 +65,52 @@ def test_scan_fanout_decision_starts_no_job(spark, tmp_path):
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+def test_python_stage_partitions_decision_starts_no_job(spark, tmp_path):
+    """One task per Arrow batch of input rows, clamped to [1, cap], with
+    rows read from the parquet footers; the cap wherever a row count is
+    not at hand. The cap is the session's shuffle parallelism floored at
+    2× defaultParallelism."""
+    sc = spark.sparkContext
+    cap = max(int(spark.conf.get("spark.sql.shuffle.partitions")),
+              2 * sc.defaultParallelism)
+    n = 1000
+    pdf = pd.DataFrame({"doc_id": np.arange(n, dtype=np.int64),
+                        "venue": np.arange(n, dtype=np.int64) % 10})
+    pdf.to_parquet(tmp_path / "flat.parquet", index=False)
+    pdf.to_parquet(tmp_path / "hive", partition_cols=["venue"], index=False)
+    flat = spark.read.parquet(str(tmp_path / "flat.parquet"))
+    hive = spark.read.parquet(str(tmp_path / "hive"))
+    ckpt = flat.localCheckpoint(eager=True)
+    mem = spark.createDataFrame(pdf)
+
+    group = "test_python_stage_partitions"
+    old = spark.conf.get(BATCH)
+    sc.setJobGroup(group, group)
+    try:
+        # fewer rows than one batch: one task
+        for df in (flat, hive, flat.join(hive, "doc_id")):
+            assert partitioning.python_stage_partitions(df) == 1
+        spark.conf.set(BATCH, "100")
+        assert partitioning.python_stage_partitions(flat) == min(cap, 10)
+        spark.conf.set(BATCH, "7")
+        assert partitioning.python_stage_partitions(flat) == min(cap, 143)
+        spark.conf.set(BATCH, str(n))
+        assert partitioning.python_stage_partitions(
+            flat.unionByName(hive.select(*flat.columns))) == 2
+        # no row count at hand: the cap
+        for df in (ckpt, mem, flat.unionByName(ckpt)):
+            assert partitioning.python_stage_partitions(df) == cap
+        spark.conf.set(BATCH, "0")
+        assert partitioning.python_stage_partitions(flat) == cap
+    finally:
+        spark.conf.set(BATCH, old)
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 

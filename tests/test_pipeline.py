@@ -40,28 +40,50 @@ def _spy_operators(monkeypatch) -> list[str]:
 
 @contextmanager
 def _job_group(sc, group: str):
-    """Run the block's Spark jobs under `group`; yields the group's job
-    ids, filled in when the block exits."""
+    """Run the block's Spark jobs under `group`, then restore the
+    enclosing group; yields the group's job ids, filled in when the
+    block exits."""
     ids: list[int] = []
+    keys = ("spark.jobGroup.id", "spark.job.description")
+    outer = [sc.getLocalProperty(k) for k in keys]
     sc.setJobGroup(group, group)
     try:
         yield ids
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+        for k, v in zip(keys, outer):
+            sc.setLocalProperty(k, v)
         ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def _spy_commits(spark, monkeypatch) -> dict[str, tuple[int, StructType]]:
+def _tasks(sc, job_ids) -> int:
+    """Tasks the jobs ran, each stage counted once (a stage a later job
+    reuses is skipped there). Past spark.ui.retainedStages the status
+    store drops skipped stages first, so a stage it no longer holds ran
+    no task."""
+    st = sc.statusTracker()
+    stages = {s for j in job_ids for s in st.getJobInfo(j).stageIds}
+    return sum(info.numCompletedTasks for info in map(st.getStageInfo, stages)
+               if info is not None)
+
+
+# tasks of one cold pipeline.run over a sf0.001 fixture, measured in the
+# test session (conftest: local[*] on 4 cores, 32 shuffle partitions,
+# 16384 rows per Arrow batch); each Python-kernel stage runs one task per
+# Arrow batch of input rows, one task each on these fixtures
+PIPELINE_TASKS = 75
+
+
+def _spy_commits(spark, monkeypatch) -> dict[str, tuple[list, StructType]]:
     """Run every manifest commit under its own job group; record per
-    stage (jobs the commit started, schema of the frame it returned)."""
-    commits: dict[str, tuple[int, StructType]] = {}
+    stage (ids of the jobs the commit started, schema of the frame it
+    returned)."""
+    commits: dict[str, tuple[list, StructType]] = {}
     real, seq = manifest.refresh_manifest, itertools.count()
 
     def spy(sp, path, stage, *a, **k):
         with _job_group(spark.sparkContext, f"commit-{next(seq)}") as ids:
             out = real(sp, path, stage, *a, **k)
-        commits[stage] = (len(ids), out[0].schema)
+        commits[stage] = (ids, out[0].schema)
         return out
 
     monkeypatch.setattr(manifest, "refresh_manifest", spy)
@@ -76,8 +98,12 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path, monkeypatch):
     calls = _spy_operators(monkeypatch)
     commits = _spy_commits(spark, monkeypatch)
 
-    results = pipeline.run(spark, pages, out, PARAMS)
+    sc = spark.sparkContext
+    with _job_group(sc, "imc-cold") as cold_jobs:
+        results = pipeline.run(spark, pages, out, PARAMS)
     assert sorted(set(calls)) == sorted(OPERATORS)
+    assert _tasks(sc, cold_jobs + [j for ids, _ in commits.values()
+                                   for j in ids]) == PIPELINE_TASKS
     expected = {"points", "segments", "eps_pairs", "assignments",
                 "rep_points", "corridors", "raster", "polygons",
                 "tile_assignments"}
@@ -94,7 +120,7 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path, monkeypatch):
         # — except venue, which keeps the operator's bigint where
         # directory inference says int
         if name != "segments":
-            assert commits[name][0] == 0, (name, commits[name][0])
+            assert commits[name][0] == [], (name, commits[name][0])
         written = spark.read.parquet(p)
         assert m["row_count"] == written.count(), name
         inferred = StructType([
@@ -211,3 +237,13 @@ def test_partitioned_stages_prune(spark, tmp_path):
     ra = pipeline.run(spark, mem, str(tmp_path / "runm"), PARAMS)
     rb = pipeline.run(spark, mem, str(tmp_path / "runm"), PARAMS)
     assert ra["points"][1] != rb["points"][1]
+
+
+def test_pipeline_task_count_is_seed_free(spark, tmp_path):
+    """A cold run over the fixture of seed 7 runs the tasks pinned for
+    seed 42 (test_pipeline_end_to_end_and_resume): the Python stages are
+    sized by input rows, and the hot-cell marker starts no job."""
+    pages = spark.read.parquet(gen_pages.ensure_pages(sf=0.001, seed=7))
+    with _job_group(spark.sparkContext, "imc-cold-s7") as ids:
+        pipeline.run(spark, pages, str(tmp_path / "s7"), PARAMS)
+    assert _tasks(spark.sparkContext, ids) == PIPELINE_TASKS

@@ -10,7 +10,8 @@ regress the shapes (the source_quota explain-gate pattern).
    refine into the join condition (169 KB of expression text), blowing
    whole-stage codegen's 64 KB method limit on every execution.
 3. Python-kernel stages pin an explicit partition count (AQE's
-   byte-based coalescing starved them of cores, r7 profile).
+   byte-based coalescing starved them of cores, r7 profile), sized by
+   the rows of the frame that feeds them.
 4. The brute-force probe collect enforces its smallness contract
    loudly (VERDICT r06 #3).
 5. multi_bucket's parsed-SQL bucket keys equal the Column-composed
@@ -121,13 +122,19 @@ def test_eps_join_barrier_value_is_identity(spark):
     assert (m["dist"] <= params.eps).all()
 
 
-def _stage_inputs(spark):
-    segs = spark.createDataFrame(pd.DataFrame({
+def _parquet(spark, tmp_path, name, pdf):
+    path = str(tmp_path / f"{name}.parquet")
+    pdf.to_parquet(path, index=False)
+    return spark.read.parquet(path)
+
+
+def _stage_inputs(spark, tmp_path):
+    segs = _parquet(spark, tmp_path, "segs", pd.DataFrame({
         "seg_id": np.arange(6, dtype=np.int64),
         "traj_id": np.array([1, 1, 1, 2, 2, 2], dtype=np.int64),
         "x1": [0.0, 1, 2, 0, 1, 2], "y1": [0.0, 0, 0, 0.5, 0.5, 0.5],
         "x2": [1.0, 2, 3, 1, 2, 3], "y2": [0.0, 0, 0, 0.5, 0.5, 0.5]}))
-    assign = spark.createDataFrame(pd.DataFrame({
+    assign = _parquet(spark, tmp_path, "assign", pd.DataFrame({
         "seg_id": np.arange(6, dtype=np.int64),
         "cluster_id": np.zeros(6, dtype=np.int64)}))
     return segs, assign
@@ -139,67 +146,78 @@ def _plan_counts(df, key):
                       plan)
 
 
-def _mdl(spark):
-    pts = spark.createDataFrame(
-        pd.DataFrame({"traj_id": [1] * 5, "seq": range(5),
-                      "x": [0.0, 1, 2, 3, 4], "y": [0.0] * 5}))
-    return _plan_counts(segments.mdl_segments(pts), "traj_id")
+# each site function returns (partition counts in the site's plan, the
+# count the policy gives the frame that feeds the site's Python stage)
+def _mdl(spark, tmp_path):
+    pts = _parquet(spark, tmp_path, "pts", pd.DataFrame(
+        {"traj_id": [1] * 5, "seq": range(5),
+         "x": [0.0, 1, 2, 3, 4], "y": [0.0] * 5}))
+    return (_plan_counts(segments.mdl_segments(pts), "traj_id"),
+            python_stage_partitions(pts))
 
 
-def _sweep(spark):
-    segs, assign = _stage_inputs(spark)
-    return _plan_counts(sweep.representative_trajectories(segs, assign),
-                        "cluster_id")
+def _joined(segs, assign):
+    return assign.select("seg_id", "cluster_id").join(
+        segs.select("seg_id", "x1", "y1", "x2", "y2"), "seg_id")
 
 
-def _corridors(spark):
-    segs, assign = _stage_inputs(spark)
-    return _plan_counts(corridors.corridor_polygons(segs, assign),
-                        "cluster_id")
+def _sweep(spark, tmp_path):
+    segs, assign = _stage_inputs(spark, tmp_path)
+    return (_plan_counts(sweep.representative_trajectories(segs, assign),
+                         "cluster_id"),
+            python_stage_partitions(_joined(segs, assign)))
 
 
-def _extract(spark):
-    rast = spark.createDataFrame(pd.DataFrame({
+def _corridors(spark, tmp_path):
+    segs, assign = _stage_inputs(spark, tmp_path)
+    return (_plan_counts(corridors.corridor_polygons(segs, assign),
+                         "cluster_id"),
+            python_stage_partitions(_joined(segs, assign)))
+
+
+def _extract(spark, tmp_path):
+    rast = _parquet(spark, tmp_path, "rast", pd.DataFrame({
         "venue": np.array([0, 0, 1], dtype=np.int64),
         "gx": np.array([0, 1, 0], dtype=np.int32),
         "gy": np.array([0, 0, 0], dtype=np.int32),
         "hits": np.array([3, 3, 3], dtype=np.int64)}))
-    return _plan_counts(raster.extract_polygons(rast), "venue")
+    return (_plan_counts(raster.extract_polygons(rast), "venue"),
+            python_stage_partitions(rast))
 
 
-def _dbscan(spark):
+def _dbscan(spark, tmp_path):
     # the kernel stage sits below dbscan's localCheckpoint, so its count
     # is the partition count of the checkpointed leaves
-    segs, _ = _stage_inputs(spark)
-    pairs = spark.createDataFrame(pd.DataFrame({
+    segs, _ = _stage_inputs(spark, tmp_path)
+    pairs = _parquet(spark, tmp_path, "pairs", pd.DataFrame({
         "a_seg": np.array([0, 1, 3], dtype=np.int64),
         "b_seg": np.array([1, 2, 4], dtype=np.int64)}))
     out = dbscan.dbscan(segs, pairs, IMCParams(min_lns=1))
     leaves = out._jdf.queryExecution().optimizedPlan().collectLeaves()
-    return [str(leaves.apply(i).rdd().getNumPartitions())
-            for i in range(leaves.size())]
+    return ([str(leaves.apply(i).rdd().getNumPartitions())
+             for i in range(leaves.size())],
+            max(python_stage_partitions(segs), python_stage_partitions(pairs)))
 
 
-def _rasterize(spark):
-    segs, _ = _stage_inputs(spark)
-    return _plan_counts(raster.rasterize(segs), "traj_id")
+def _rasterize(spark, tmp_path):
+    segs, _ = _stage_inputs(spark, tmp_path)
+    return (_plan_counts(raster.rasterize(segs), "traj_id"),
+            python_stage_partitions(
+                segs.select("traj_id", "x1", "y1", "x2", "y2")))
 
 
-@pytest.mark.parametrize("build,want", [
-    (_mdl, python_stage_partitions),
-    (_sweep, python_stage_partitions),
-    (_corridors, python_stage_partitions),
-    (_extract, python_stage_partitions),
-    (_dbscan, python_stage_partitions),
-    (_rasterize, lambda s: 2 * s.sparkContext.defaultParallelism),
+@pytest.mark.parametrize("build", [
+    _mdl, _sweep, _corridors, _extract, _dbscan, _rasterize,
 ], ids=["mdl_segments", "representative_trajectories", "corridor_polygons",
         "extract_polygons", "dbscan", "rasterize"])
-def test_python_kernel_stages_pin_partition_count(spark, build, want):
+def test_python_kernel_stages_pin_partition_count(spark, tmp_path, build):
     """Every shuffle feeding a Python-kernel stage carries the policy's
-    explicit count (AQE's byte-based coalescing would starve it), and
-    rasterize's scan fan-out carries fan_out's."""
-    counts = build(spark)
-    assert counts and set(counts) == {str(want(spark))}, counts
+    explicit count for the frame that feeds it (AQE's byte-based
+    coalescing would starve it): on these few-row parquet inputs, one
+    task, where the session-wide count would start many."""
+    counts, want = build(spark, tmp_path)
+    assert counts and set(counts) == {str(want)}, (counts, want)
+    assert want == 1
 
 
 def test_bruteforce_probe_cap_raises_loudly(emb):
